@@ -15,19 +15,32 @@ surface is thin option-mapping:
 * compression          → ``option("compression", ...)`` — reference
   golden files show ZLIB and uncompressed (test-resources/*.orc)
 
+Row-seq writes (``write-rows``, core.clj:662-671) batch rows
+column-wise before encoding, as the reference fills
+``VectorizedRowBatch``es (core.clj:637-638,670): :func:`rows_to_df`
+checks and converts each row with Spark's own verifier and converters,
+builds one Arrow array per column, and hands the table to
+``createDataFrame``, so rows reach the JVM as Arrow record batches
+with no pickling and no Python worker.
+
 Error-tolerant writes (bad cell → null + warn, core.clj:443-450) are
 reproduced by :func:`coerce_or_null` — an explicit ``try_cast``
 projection, because Spark's writer (correctly) throws on type
-mismatches.
+mismatches. Nested cells are kept when they verify against their
+column's type and nulled otherwise.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterable
+from decimal import ROUND_HALF_UP, Context, Decimal
+from typing import Any, Callable, Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import _create_converter, _make_type_verifier
 
 
 def write_orc(
@@ -137,39 +150,182 @@ def write_rows(
     (positional), matching the reference's map/sequential row writers
     (core.clj:610-620). ``schema`` is a DDL string or StructType —
     the reference likewise takes an explicit schema (core.clj:626).
-    ``lenient=True`` reproduces the reference's cell-error→null
-    tolerance (core.clj:443-450) via :func:`coerce_or_null`.
+    Rows reach the JVM as Arrow record batches, the analog of the
+    reference's ``VectorizedRowBatch`` (core.clj:637-638,670); see
+    :func:`rows_to_df`. ``lenient=True`` reproduces the reference's
+    cell-error→null tolerance (core.clj:443-450), nested columns
+    included.
+    """
+    write_orc(rows_to_df(spark, rows, schema, lenient=lenient), path, overwrite=overwrite, **orc_opts)
+
+
+def rows_to_df(
+    spark: SparkSession,
+    rows: Iterable[Any],
+    schema: str | T.StructType,
+    *,
+    lenient: bool = False,
+) -> DataFrame:
+    """The DataFrame :func:`write_rows` writes: rows as Arrow record batches.
+
+    Strict rows pass the check ``createDataFrame(..., verifySchema=True)``
+    runs (a bad cell raises). Lenient rows keep the reference's
+    bad-cell → null rule: scalar cells are stringified and cast with
+    :func:`coerce_or_null`; a nested (array, map, struct) cell is kept
+    when Spark's verifier accepts it for its column's type, else null.
     """
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
-    if lenient:
-        # accept anything stringifiable, then try_cast column-wise
-        rows = list(rows)
-        raw = spark.createDataFrame(
-            [_stringify_row(r, schema) for r in rows],
-            T.StructType([T.StructField(f.name, T.StringType(), True) for f in schema.fields]),
+    rows = list(rows)
+    if not lenient:
+        verify = _make_type_verifier(schema)
+        for r in rows:
+            verify(r)
+        return _arrow_df(spark, rows, schema)
+    raw = T.StructType(
+        [T.StructField(f.name, f.dataType if _nested(f.dataType) else T.StringType()) for f in schema.fields]
+    )
+    cells = [_keep_if_valid(f.dataType) if _nested(f.dataType) else _stringify for f in schema.fields]
+    names = schema.names
+    lenient_rows = []
+    for r in rows:
+        vals = [r.get(n) for n in names] if isinstance(r, dict) else list(r) + [None] * (len(names) - len(r))
+        lenient_rows.append(tuple(cell(v) for cell, v in zip(cells, vals)))
+    return coerce_or_null(_arrow_df(spark, lenient_rows, raw), schema)
+
+
+def _nested(dtype: T.DataType) -> bool:
+    return isinstance(dtype, (T.ArrayType, T.MapType, T.StructType))
+
+
+def _stringify(v: Any) -> str | None:
+    if v is None:
+        return None
+    if isinstance(v, bool):
+        return "true" if v else "false"  # JVM-style, not Python's 'True'
+    return str(v)
+
+
+def _keep_if_valid(dtype: T.DataType) -> Callable[[Any], Any]:
+    verify = _make_type_verifier(dtype)
+
+    def keep(v):
+        try:
+            verify(v)
+        except (TypeError, ValueError):  # PySpark's type/value errors subclass these
+            return None
+        return v
+
+    return keep
+
+
+def _arrow_df(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """Verified rows → DataFrame through one Arrow array per column.
+
+    Each row goes through Spark's ``_create_converter`` and
+    ``StructType.toInternal``, as ``createDataFrame(list)`` does, so
+    values keep their meaning: timestamps become Spark's internal UTC
+    microseconds (naive datetimes read in local time), dates epoch days.
+    Maps travel as arrays of key/value structs and are rebuilt with
+    ``map_from_entries``: Spark re-assembles a nested Arrow map without
+    its null mask under pyarrow < 17, which would turn a null map into
+    an empty one.
+    """
+    to_tuple = _create_converter(schema)
+    internal = [schema.toInternal(to_tuple(r)) for r in rows]
+    columns = list(zip(*internal)) if internal else [()] * len(schema.fields)
+    wire = _wire_type(schema)
+    arrays = []
+    for f, w, col in zip(schema.fields, wire.fields, columns):
+        conv = _wire_value(f.dataType)
+        values = [conv(v) for v in col] if conv else list(col)
+        arrays.append(pa.array(values, type=to_arrow_type(w.dataType)))
+    df = spark.createDataFrame(pa.Table.from_arrays(arrays, names=schema.names), wire)
+    rebuilt = {
+        f.name: _rebuild_maps(F.col(f"`{f.name.replace('`', '``')}`"), f.dataType)
+        for f in schema.fields
+        if _has_map(f.dataType)
+    }
+    return df.withColumns(rebuilt) if rebuilt else df
+
+
+def _wire_type(dtype: T.DataType) -> T.DataType:
+    """``dtype`` with every map replaced by an array of key/value structs."""
+    if isinstance(dtype, T.MapType):
+        # all nullable: Spark rebuilds nested Arrow structs with nullable fields
+        entry = T.StructType(
+            [
+                T.StructField("key", _wire_type(dtype.keyType)),
+                T.StructField("value", _wire_type(dtype.valueType)),
+            ]
         )
-        df = coerce_or_null(raw, schema)
-    else:
-        df = spark.createDataFrame(list(rows), schema)
-    write_orc(df, path, overwrite=overwrite, **orc_opts)
+        return T.ArrayType(entry)
+    if isinstance(dtype, T.ArrayType):
+        return T.ArrayType(_wire_type(dtype.elementType), dtype.containsNull)
+    if isinstance(dtype, T.StructType):
+        return T.StructType([T.StructField(f.name, _wire_type(f.dataType), f.nullable) for f in dtype.fields])
+    return dtype
 
 
-def _stringify_row(row: Any, schema: T.StructType) -> tuple:
-    names = [f.name for f in schema.fields]
-    if isinstance(row, dict):
-        vals = [row.get(n) for n in names]
-    else:
-        vals = list(row) + [None] * (len(names) - len(row))
-    out = []
-    for v in vals:
-        if v is None:
-            out.append(None)
-        elif isinstance(v, bool):
-            out.append("true" if v else "false")  # JVM-style, not Python's 'True'
-        else:
-            out.append(str(v))
-    return tuple(out)
+_DECIMAL_CTX = Context(prec=38)  # holds any decimal(38, s), where the default 28 digits would not
+
+
+def _wire_value(dtype: T.DataType) -> Callable[[Any], Any] | None:
+    """Internal value → the value Arrow takes for ``_wire_type(dtype)``;
+    ``None`` when the two are the same."""
+    if isinstance(dtype, T.DecimalType):
+        # Spark rounds HALF_UP to the column's scale; Arrow would raise
+        q = Decimal(1).scaleb(-dtype.scale)
+        return lambda v: None if v is None else v.quantize(q, ROUND_HALF_UP, _DECIMAL_CTX)
+    if isinstance(dtype, T.ArrayType):
+        conv = _wire_value(dtype.elementType)
+        return conv and (lambda v: None if v is None else [conv(x) for x in v])
+    if isinstance(dtype, T.MapType):
+        kc = _wire_value(dtype.keyType) or _same
+        vc = _wire_value(dtype.valueType) or _same
+        return lambda v: None if v is None else [(kc(k), vc(x)) for k, x in v.items()]
+    if isinstance(dtype, T.StructType):
+        convs = [_wire_value(f.dataType) or _same for f in dtype.fields]
+        if all(c is _same for c in convs):
+            return None
+        return lambda v: None if v is None else tuple(c(x) for c, x in zip(convs, v))
+    return None
+
+
+def _same(v: Any) -> Any:
+    return v
+
+
+def _rebuild_maps(col, dtype: T.DataType):
+    """Catalyst expression turning ``col`` of ``_wire_type(dtype)`` back
+    into ``dtype``."""
+    if not _has_map(dtype):
+        return col
+    if isinstance(dtype, T.MapType):
+        k, v = dtype.keyType, dtype.valueType
+        if _has_map(k) or _has_map(v):
+            col = F.transform(
+                col,
+                lambda e: F.struct(
+                    _rebuild_maps(e["key"], k).alias("key"),
+                    _rebuild_maps(e["value"], v).alias("value"),
+                ),
+            )
+        return F.map_from_entries(col)
+    if isinstance(dtype, T.ArrayType):
+        return F.transform(col, lambda x: _rebuild_maps(x, dtype.elementType))
+    fields = [_rebuild_maps(col[f.name], f.dataType).alias(f.name) for f in dtype.fields]
+    return F.when(col.isNotNull(), F.struct(*fields))
+
+
+def _has_map(dtype: T.DataType) -> bool:
+    if isinstance(dtype, T.MapType):
+        return True
+    if isinstance(dtype, T.ArrayType):
+        return _has_map(dtype.elementType)
+    if isinstance(dtype, T.StructType):
+        return any(_has_map(f.dataType) for f in dtype.fields)
+    return False
 
 
 def coerce_or_null(df: DataFrame, target: T.StructType | str) -> DataFrame:

@@ -17,7 +17,7 @@ from decimal import Decimal
 import pytest
 
 from orca_spark.frame import frame_to_maps, frame_to_rows, stats, to_frame
-from orca_spark.io import coerce_or_null, read_frame, read_orc, write_rows
+from orca_spark.io import coerce_or_null, read_frame, read_orc, rows_to_df, write_rows
 
 UTC = dt.timezone.utc
 
@@ -128,6 +128,100 @@ def test_roundtrip_lenient_bad_cell_nulls(spark, orc_path):
     )
     maps = sorted(frame_to_maps(frame), key=lambda m: m["y"])
     assert maps == [{"x": 7, "y": "also ok"}, {"x": None, "y": "ok"}]
+
+
+@pytest.mark.parametrize(
+    "ddl,value",
+    [("tinyint", 300), ("int", "7"), ("double", 1), ("int", 1.5)],
+)
+def test_strict_write_rejects_mistyped_cell(spark, orc_path, ddl, value):
+    """A strict write checks every cell with Spark's own verifier, the
+    check ``createDataFrame(..., verifySchema=True)`` runs: an out-of-range
+    or mistyped cell raises instead of being cast."""
+    with pytest.raises((TypeError, ValueError)):
+        write_rows(spark, orc_path, [(value,)], f"struct<x:{ddl}>")
+
+
+def test_strict_write_rounds_decimal_half_up(spark, orc_path):
+    """Extra fraction digits round HALF_UP to the column's scale, as
+    Spark's decimal conversion does."""
+    frame = roundtrip(
+        spark, orc_path, [(Decimal("1.234"),), (Decimal("1.235"),), (Decimal("-1.235"),)],
+        "struct<x:decimal(7,2)>",
+    )
+    assert sorted(frame["x"]) == [Decimal("-1.24"), Decimal("1.23"), Decimal("1.24")]
+
+
+def test_strict_write_datetime_into_date(spark, orc_path):
+    frame = roundtrip(spark, orc_path, [(dt.datetime(2020, 1, 1, 5),)], "struct<x:date>")
+    assert frame["x"] == [dt.date(2020, 1, 1)]
+
+
+def test_null_maps_with_nested_values_roundtrip(spark, orc_path):
+    """A null map stays null, not empty, also where its values are nested
+    (inside an array and a struct too)."""
+    rows = [
+        (None, [None, {"x": [1]}], (None,)),
+        ({"k": None, "e": []}, None, None),
+        ({"k": [(1, None)]}, [], ({"a": None},)),
+    ]
+    schema = (
+        "struct<m:map<string,array<struct<a:int,b:string>>>,"
+        "a:array<map<string,array<int>>>,s:struct<n:map<string,array<int>>>>"
+    )
+    got = [
+        (
+            None if r["m"] is None
+            else {k: None if v is None else [tuple(e) for e in v] for k, v in r["m"].items()},
+            r["a"],
+            None if r["s"] is None else tuple(r["s"]),
+        )
+        for r in frame_to_maps(roundtrip(spark, orc_path, rows, schema))
+    ]
+    assert sorted(got, key=repr) == sorted(rows, key=repr)
+
+
+def test_roundtrip_lenient_nested_bad_cells_null(spark, orc_path):
+    """Lenient writes of array, struct and map columns: a cell that does
+    not fit its column's type reads back null, every other cell as
+    written (core.clj:443-450)."""
+    rows = [
+        {"id": 1, "tags": ["a", "b"], "pt": {"x": 1, "y": "p"}, "attrs": {"k": 1}},
+        {"id": 2, "tags": "n/a", "pt": {"x": 2, "y": "q"}, "attrs": {"k": 2, "j": None}},
+        {"id": 3, "tags": [], "pt": "12x", "attrs": {}},
+        {"id": 4, "tags": ["c"], "pt": (4, None), "attrs": {"k": "many"}},
+        {"id": 5, "tags": None, "pt": None, "attrs": None},
+    ]
+    frame = roundtrip(
+        spark, orc_path, rows,
+        "struct<id:int,tags:array<string>,pt:struct<x:int,y:string>,attrs:map<string,int>>",
+        lenient=True,
+    )
+    got = {
+        m["id"]: (m["tags"], None if m["pt"] is None else tuple(m["pt"]), m["attrs"])
+        for m in frame_to_maps(frame)
+    }
+    assert got == {
+        1: (["a", "b"], (1, "p"), {"k": 1}),
+        2: (None, (2, "q"), {"k": 2, "j": None}),
+        3: ([], None, {}),
+        4: (["c"], (4, None), None),
+        5: (None, None, None),
+    }
+
+
+@pytest.mark.parametrize("lenient", [False, True])
+def test_rows_reach_jvm_without_python_worker(spark, lenient):
+    """The frame write_rows builds is fed by Arrow record batches: its RDD
+    lineage has no PythonRDD, so no row is pickled through a Python
+    worker."""
+    df = rows_to_df(
+        spark, [(1, ["a"], {"k": 1.5}), (2, None, None)],
+        "struct<x:int,a:array<string>,m:map<string,double>>", lenient=lenient,
+    )
+    lineage = df._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+    assert sorted(tuple(r) for r in df.collect())[0] == (1, ["a"], {"k": 1.5})
 
 
 def test_orc_writer_options(spark, orc_path):
