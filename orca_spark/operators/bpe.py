@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orca_spark import memo
 from orca_spark.registry import register
 from orca_spark.tables import load
 
@@ -135,15 +136,6 @@ def _bpe_oracle_sql(n_merges: int = _N_MERGES) -> str:
     )
 
 
-# per-corpus merge-table memo, the kmeans_centroids/train_pq convention
-# (bench.py's timing note: "index/codebook builds are memoized per corpus
-# exactly as a deployment trains once and persists"; run 1 pays training
-# and stays visible in the bench's cold_run field). The learned merge
-# table IS the tokenizer artifact a deployment ships; keyed on
-# (cache_key, n_merges).
-_MERGE_CACHE: dict[tuple[str, int], list[tuple]] = {}
-
-
 def bpe_train(
     words: DataFrame, n_merges: int = _N_MERGES, cache_key: str | None = None
 ) -> list[tuple]:
@@ -157,10 +149,13 @@ def bpe_train(
     (the scalar that steers the next step — same bounded pattern as
     connected components' convergence sum). The vocabulary table is
     localCheckpoint'ed each step so the rewrite lineage never stacks.
+
+    ``cache_key`` (the corpus dir) memoizes the merges in orca_spark.memo.
     """
-    memo = (cache_key, n_merges) if cache_key is not None else None
-    if memo is not None and memo in _MERGE_CACHE:
-        return _MERGE_CACHE[memo]
+    if cache_key is not None:
+        return memo.cached(
+            cache_key, ("bpe", n_merges), lambda: bpe_train(words, n_merges)
+        )
     vocab = words.select(
         F.filter(F.split("word", ""), lambda c: c != F.lit("")).alias("syms"),
         F.col("freq"),
@@ -234,8 +229,6 @@ def bpe_train(
             .alias("syms"),
             "freq",
         ).localCheckpoint(eager=True)
-    if memo is not None:
-        _MERGE_CACHE[memo] = merges
     return merges
 
 

@@ -25,11 +25,9 @@ def scratch_path(name: str, sf_dir: str) -> str:
     """Writable path for a query's side artifacts (ORC round-trips,
     persisted indexes), namespaced by corpus tag.
 
-    The returned path is asserted to live OUTSIDE ``sf_dir``: the
-    relation cache in orca_spark.tables assumes the bench corpora are
-    immutable, and every writer in the engine goes through here — so
-    the corpus-immutability contract is structural, not conventional
-    (r11 verdict "what's wrong" #4)."""
+    The returned path is asserted to live OUTSIDE ``sf_dir``: the DuckDB
+    oracles read the same corpus, and every writer in the engine goes
+    through here, so corpus immutability is structural."""
     tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
     out = os.path.join(_SCRATCH, f"{name}_{tag}")
     # realpath, not abspath: a symlinked corpus (or scratch) path must
@@ -41,8 +39,7 @@ def scratch_path(name: str, sf_dir: str) -> str:
     if out_abs == sf_abs or out_abs.startswith(sf_abs + os.sep):
         raise ValueError(
             f"scratch_path {out!r} would write under the immutable corpus "
-            f"dir {sf_dir!r} — the table-relation cache would serve stale "
-            "file listings"
+            f"dir {sf_dir!r} — the DuckDB oracles read the same corpus"
         )
     return out
 

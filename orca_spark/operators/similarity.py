@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from orca_spark import memo
 from orca_spark.registry import register
 from orca_spark.tables import load
 
@@ -568,7 +569,6 @@ def ivf_assign_join(
 
 
 _KMEANS_SAMPLE = 4096
-_CENTROID_CACHE: dict[tuple[str, int], list[tuple[int, list[float]]]] = {}
 
 
 def kmeans_centroids(
@@ -597,12 +597,15 @@ def kmeans_centroids(
     applies — raise ``k`` with a broadcast centroid-table join replacing
     the literal argmin past k≈64.
 
-    ``cache_key`` memoizes the trained quantizer per corpus (the index
-    a real deployment trains once and persists); pass e.g. the sf_dir.
+    ``cache_key`` (the corpus dir) memoizes the trained quantizer per
+    corpus (``orca_spark.memo``), rebuilt when the corpus files change.
     """
-    ck = None if cache_key is None else (cache_key, k)
-    if ck is not None and ck in _CENTROID_CACHE:
-        return _CENTROID_CACHE[ck]
+    if cache_key is not None:
+        return memo.cached(
+            cache_key,
+            ("centroids", k, iters),
+            lambda: kmeans_centroids(emb, iters, k=k),
+        )
     import numpy as np
 
     rows = emb.select("vec_id", "e").orderBy("vec_id").limit(_KMEANS_SAMPLE).collect()
@@ -629,10 +632,7 @@ def kmeans_centroids(
                     moved = True
         if not moved:
             break
-    out = [(c, [float(v) for v in cents[c]]) for c in range(k)]
-    if ck is not None:
-        _CENTROID_CACHE[ck] = out
-    return out
+    return [(c, [float(v) for v in cents[c]]) for c in range(k)]
 
 
 def ivf_topk_df(

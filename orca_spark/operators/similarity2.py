@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from orca_spark import memo
 from orca_spark.operators.similarity import (
     _N_QUERIES,
     _TOP_K,
@@ -234,9 +235,6 @@ def semantic_vs_lexical_dedup_bucketed(spark: SparkSession, sf_dir: str) -> Data
 # IVF + product quantization
 # ---------------------------------------------------------------------------
 
-_PQ_CACHE: dict[str, list[list[list[float]]]] = {}
-
-
 def train_pq(
     emb: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -253,10 +251,14 @@ def train_pq(
     Returns ``codebooks[m][code] -> sub-vector`` (length dim/m each).
     ``cache_key`` memoizes per corpus, like ``kmeans_centroids``.
     """
+    if cache_key is not None:
+        return memo.cached(
+            cache_key,
+            ("pq", m, ncodes, sample),
+            lambda: train_pq(emb, centroids, m, ncodes, sample),
+        )
     import numpy as np
 
-    if cache_key is not None and cache_key in _PQ_CACHE:
-        return _PQ_CACHE[cache_key]
     rows = (
         emb.orderBy("vec_id").limit(sample).select("vec_id", "e").collect()
     )
@@ -281,8 +283,6 @@ def train_pq(
                 if mask.any():
                     cb[c] = sub[mask].mean(axis=0)
         books.append([[float(v) for v in row] for row in cb])
-    if cache_key is not None:
-        _PQ_CACHE[cache_key] = books
     return books
 
 

@@ -6,6 +6,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from orca_spark import memo
+
 TABLES = [
     "region",
     "nation",
@@ -20,15 +22,6 @@ TABLES = [
 ]
 
 
-# (session id, sf_dir, table) -> resolved DataFrame. spark.read.parquet
-# lists files and reads footers on EVERY call (~0.1-0.3 s of driver
-# latency per table reference); a metastore-backed deployment resolves a
-# table once and reuses the relation, which is what this mirrors. The
-# cached object is only the analyzed logical plan — each query still
-# plans/scans independently.
-_RELATION_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table. Parquet scan — columnar, pushdown-capable.
 
@@ -36,11 +29,15 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (check ``PushedFilters``/``ReadSchema`` in ``.explain``), so at
     100 TB a query touching 2 columns of lineitem reads 2 column chunks,
     not the table.
+
+    The resolved relation (file listing + footers, ~0.1-0.3 s per read)
+    is memoized in ``orca_spark.memo``; queries still plan and scan anew.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _RELATION_CACHE.get(key)
-    if cached is not None:
-        return cached
+    key = ("relation", spark.sparkContext.applicationId, name)
+    return memo.cached(sf_dir, key, lambda: _read(spark, sf_dir, name))
+
+
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     # The events table stores TIMESTAMP(NANOS) which Spark's parquet reader
     # rejects by default; read nanos as long (legacy conf set in
@@ -57,24 +54,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # under the UTC session tz this is value-preserving, and
             # watermarks / unix_micros / window ops require TIMESTAMP.
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
-    _RELATION_CACHE[key] = df
     return df
-
-
-def invalidate(sf_dir: str | None = None) -> None:
-    """Drop cached relations (all, or those under one ``sf_dir``).
-
-    The cache assumes the bench corpora are immutable; any writer that
-    ever rewrites a table under ``sf_dir`` must call this first or the
-    cached relation can serve a stale file listing / fail on vanished
-    files. Also the lever if the per-(app, sf_dir) entries ever matter
-    for memory (they are analyzed plans, a few KiB each).
-    """
-    if sf_dir is None:
-        _RELATION_CACHE.clear()
-        return
-    for key in [k for k in _RELATION_CACHE if k[1] == sf_dir]:
-        del _RELATION_CACHE[key]
 
 
 def widen(df: DataFrame) -> DataFrame:

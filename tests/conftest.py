@@ -59,33 +59,30 @@ def _blind_construction(spark):
     contract (each used to run its own ~70-80 s sweep; the builders
     that train model artifacts during construction make a second sweep
     expensive). Returns (table_usage, schemas)."""
-    from orca_spark import tables as tables_mod
+    from orca_spark import memo
     from orca_spark.queries import queries
 
-    class _Recorder(dict):
-        def __init__(self):
-            super().__init__()
-            self.touched = set()
+    touched: set[str] = set()
+    orig = memo.cached
 
-        def get(self, key, default=None):
-            self.touched.add(key[2])
-            return super().get(key, default)
+    def recording(sf_dir, key, build):
+        if key[0] == "relation":
+            touched.add(key[2])
+        return orig(sf_dir, key, build)
 
-    rec = _Recorder()
-    orig = tables_mod._RELATION_CACHE
-    tables_mod._RELATION_CACHE = rec
+    memo.cached = recording
     used = {}
     schemas = {}
     try:
         for name, fn in queries().items():
             if name.startswith(SIDE_EFFECTING_PREFIXES):
                 continue
-            rec.touched = set()
+            touched.clear()
             df = fn(spark, SF_DIR)
-            used[name] = frozenset(rec.touched)
+            used[name] = frozenset(touched)
             schemas[name] = df.schema
     finally:
-        tables_mod._RELATION_CACHE = orig
+        memo.cached = orig
     return used, schemas
 
 
@@ -95,10 +92,10 @@ def table_usage(_blind_construction):
     time. Ground truth for the per-table adversarial-harness
     completeness contracts (the r08 Gopher overflow escaped because a
     documents-only query was missing from a manually-curated list).
-    load() resolves orca_spark.tables._RELATION_CACHE at call time, so
-    swapping it for a recording dict intercepts every from-imported
-    reference. SIDE_EFFECTING_PREFIXES queries are skipped, same as the
-    schema contract (tests/test_registry_contract.py)."""
+    load() resolves orca_spark.memo.cached at call time, so swapping it
+    for a recording wrapper intercepts every from-imported reference.
+    SIDE_EFFECTING_PREFIXES queries are skipped, same as the schema
+    contract (tests/test_registry_contract.py)."""
     return _blind_construction[0]
 
 

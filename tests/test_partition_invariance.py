@@ -95,17 +95,13 @@ def test_all_oracled_queries_are_covered():
 
 
 def _clear_corpus_memos() -> None:
-    """Drop every per-corpus model memo (kmeans centroids, PQ codebooks,
-    BPE merge tables, edit-distance salt histograms) so BOTH regimes
-    genuinely recompute their model artifacts — a memo surviving from
-    regime A would trivially make regime B agree on the artifact and
-    mask partition-dependence in the training step itself."""
-    from orca_spark.operators import bpe, linkage, similarity, similarity2
+    """Drop every per-corpus memo (relations and model artifacts alike)
+    so BOTH regimes genuinely recompute their model artifacts — a memo
+    surviving from regime A would trivially make regime B agree on the
+    artifact and mask partition-dependence in the training step itself."""
+    from orca_spark import memo
 
-    similarity._CENTROID_CACHE.clear()
-    similarity2._PQ_CACHE.clear()
-    bpe._MERGE_CACHE.clear()
-    linkage._SALT_CACHE.clear()
+    memo.clear()
 
 
 @pytest.mark.parametrize("name", NAMES)

@@ -49,10 +49,8 @@ def test_chunk_windows_cover_every_token_exactly_ceil(spark, tmp_path):
     )
     assert got == [(0, 0, 64), (1, 32, 38)]
     # short doc: one clipped chunk
+    # rewritten in place: the memoized relation must notice on its own
     d2 = _write_docs(tmp_path, [(1, "a b c", "en", "s0")])
-    from orca_spark.tables import invalidate
-
-    invalidate()
     got2 = [
         (r.chunk_id, r.start_tok, r.len_tok)
         for r in queries()["corpus_chunk_windows"](spark, d2).collect()
