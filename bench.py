@@ -286,7 +286,7 @@ def main() -> None:
         # runs so the median reads steady state, not JIT
         "ivm_incremental_agg": runs_per_query + 4,
         # r08: the pair-scoring stage restructure (one 64-term dot chain
-        # per codegen stage — see similarity2.ivf_near_dup_pairs) moved
+        # per codegen stage — see similarity.threshold_pairs) moved
         # the query from permanently-interpreted (~13 s flat) to
         # JIT-compiled (~1.4 s steady), but run 0 now pays C2 compiling
         # the huge generated method (~12 s). Extra runs so the median

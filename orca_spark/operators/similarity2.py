@@ -40,6 +40,7 @@ from orca_spark.operators.similarity import (
     ivf_assign,
     kmeans_centroids,
     load_embeddings,
+    threshold_pairs,
 )
 from orca_spark.registry import register
 from orca_spark.tables import load
@@ -143,40 +144,12 @@ def ivf_near_dup_pairs(
     spread = keyed.repartition(
         max(assigned.sparkSession.sparkContext.defaultParallelism * 2, 16), "vec_id"
     )
-    a, b = spread.alias("a"), keyed.alias("b")
-    # The candidate scan (threshold INSIDE the join condition, where
-    # Catalyst pushes it anyway) and the survivor scoring are kept in
-    # SEPARATE codegen stages, split by the repartition barrier below.
-    # Fusing them puts the 64-term dot chain in the stage's generated
-    # method TWICE (condition + output projection), which crosses
-    # janino's hard 64 KB method limit — Spark then silently executes
-    # the WHOLE stage interpreted, measured 60× slower on the candidate
-    # loop at sf0.1 (12 s vs 0.2 s; spark.sql.codegen.hugeMethodLimit
-    # cannot help, the classfile format itself is the cap). The rescore
-    # pass re-evaluates the dot only for SURVIVORS (output-sized, the
-    # near-dup pairs themselves), and the barrier shuffles survivor
-    # rows only — at any scale that is the cheapest stage of the query.
-    raw = dot("a.e", "b.e", validated=True) / (F.col("a.n") * F.col("b.n"))
-    survivors = (
-        a.join(
-            b,
-            (F.col("a.c") == F.col("b.c")) & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .where(once)
-        .where(raw >= threshold)
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.col("a.e").alias("ea"),
-            F.col("b.e").alias("eb"),
-            F.col("a.n").alias("na"),
-            F.col("b.n").alias("nb"),
-        )
-        .repartition("vec_a")  # stage barrier: see codegen note above
-    )
-    rescore = dot("ea", "eb", validated=True) / (F.col("na") * F.col("nb"))
-    return survivors.select(
-        "vec_a", "vec_b", F.round(rescore, 4).alias("cosine")
+    joined = spread.alias("a").join(
+        keyed.alias("b"),
+        (F.col("a.c") == F.col("b.c")) & (F.col("a.vec_id") < F.col("b.vec_id")),
+    ).where(once)
+    return threshold_pairs(joined, threshold).select(
+        "vec_a", "vec_b", F.round("raw", 4).alias("cosine")
     )
 
 

@@ -130,7 +130,8 @@ def configure_session(spark: SparkSession) -> SparkSession:
     except Exception:
         pass
     try:
-        # nanosecond-timestamp parquet (events table) reads as long
+        # nanosecond-timestamp parquet (an external corpus's events
+        # table; the repository's corpora store micros) reads as long
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass  # static conf on some builds; get_spark sets it at build time

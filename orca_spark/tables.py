@@ -39,10 +39,13 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    # The events table stores TIMESTAMP(NANOS) which Spark's parquet reader
-    # rejects by default; read nanos as long (legacy conf set in
-    # configure_session) and truncate to microseconds — exactly what DuckDB
-    # does when it surfaces the column as TIMESTAMP (µs).
+    # The repository's corpora store events.ts as TIMESTAMP(MICROS), which
+    # Spark reads as TIMESTAMP directly. The bigint branch is the
+    # defensive path for an external corpus written as TIMESTAMP(NANOS):
+    # Spark's parquet reader rejects NANOS by default, so it reads as a
+    # long (legacy conf set in configure_session) and is truncated to
+    # microseconds — exactly what DuckDB does when it surfaces the column
+    # as TIMESTAMP (µs).
     for field in df.schema.fields:
         if field.name == "ts" and isinstance(field.dataType, T.LongType):
             df = df.withColumn(

@@ -740,30 +740,68 @@ def test_mix_schedule_and_apportionment_window_over_manifests(spark):
     assert ex < ag, "global window does not sit above the shard aggregate"
 
 
+def _has_join_below(tree: list[str], node_id: str) -> bool:
+    """Whether the subtree of tree node ``node_id`` holds a join: the
+    subtree is every following line indented deeper than the node."""
+    i = next(i for i, l in enumerate(tree) if l.endswith(f" ({node_id})"))
+    depth = re.search(r"[A-Za-z]", tree[i]).start()
+    for line in tree[i + 1:]:
+        if re.search(r"[A-Za-z]", line).start() <= depth:
+            return False
+        if "Join" in line:
+            return True
+    return False
+
+
 def test_pair_scan_scoring_is_stage_split(spark):
-    """The embedding pair scans must keep the 64-term dot chain in ONE
-    codegen stage each: threshold inside the join, rescore behind a
-    survivor-sized exchange. Fusing them puts the chain in the stage's
-    generated method twice, crossing janino's hard 64 KB method cap —
-    Spark then silently runs the whole candidate loop interpreted
-    (measured 10-20x at sf0.1; see similarity2.ivf_near_dup_pairs).
-    The barrier is the structural witness: an Exchange must sit between
-    the pair join and the final cosine projection."""
-    for name in ["embedding_near_dup_pairs", "embedding_near_dup_pairs_ivf"]:
-        p = plan_str(spark, name)
-        # the barrier partitions by the survivor key (detail section)
-        assert "hashpartitioning(vec_a" in p, (
-            f"{name}: survivor-rescore exchange missing — the dot chain "
-            "is fused back into the join stage"
-        )
-        # and in the tree (parents print first) an Exchange sits ABOVE
-        # the pair join: tree lines end where the per-node details begin
-        tree = p.split("\n(1)")[0].splitlines()
-        ex = next((i for i, l in enumerate(tree) if "Exchange" in l), None)
-        jn = next((i for i, l in enumerate(tree) if "Join" in l), None)
-        assert ex is not None, f"{name}: no Exchange in the plan tree"
-        assert jn is not None, f"{name}: no Join in the plan tree"
-        assert ex < jn, f"{name}: rescore exchange not above the join"
+    """The embedding pair scans score through
+    ``similarity.threshold_pairs``: threshold inside the join, cosine
+    rescored behind an exchange keyed on BOTH pair ids (the split is
+    load-bearing; the measurements are in that docstring). The exchange
+    must survive every shuffle width, so the plans are checked at the
+    two widths that let Spark drop a barrier keyed on ``vec_a`` alone:
+    ``2 x defaultParallelism`` (the exact scans' spread count) and
+    ``max(2 x defaultParallelism, 16)`` (the IVF spread count)."""
+    dp = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in sorted({2 * dp, max(2 * dp, 16)}):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            for name in [
+                "embedding_near_dup_pairs",
+                "embedding_near_dup_pairs_ivf",
+                "semantic_vs_lexical_dedup",
+            ]:
+                p = plan_str(spark, name)
+                at = f"{name} @ {parts} shuffle partitions"
+                # the barrier partitions by the survivor key (detail section)
+                assert "hashpartitioning(vec_a" in p, (
+                    f"{at}: survivor-rescore exchange missing — the dot "
+                    "chain is fused back into the join stage"
+                )
+                # tree lines end where the per-node details begin
+                tree = p.split("\n(1)")[0].splitlines()
+                if name != "semantic_vs_lexical_dedup":
+                    # a single pair scan: in the tree (parents print
+                    # first) an Exchange sits ABOVE the pair join
+                    ex = next((i for i, l in enumerate(tree) if "Exchange" in l), None)
+                    jn = next((i for i, l in enumerate(tree) if "Join" in l), None)
+                    assert ex is not None, f"{at}: no Exchange in the plan tree"
+                    assert jn is not None, f"{at}: no Join in the plan tree"
+                    assert ex < jn, f"{at}: rescore exchange not above the join"
+                keyed = re.findall(
+                    r"^\((\d+)\) Exchange\nInput \[\d+\]: .*\nArguments: "
+                    r"hashpartitioning\(vec_a#\d+L?, vec_b#\d+L?, \d+\)",
+                    p,
+                    re.M,
+                )
+                assert keyed, f"{at}: no exchange keyed on (vec_a, vec_b)"
+                for node in keyed:
+                    assert _has_join_below(tree, node), (
+                        f"{at}: (vec_a, vec_b) exchange ({node}) not above the pair join"
+                    )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_span_scrub_hashed_shuffles_only_on_longs(spark):

@@ -485,7 +485,8 @@ def test_ivf_array_once_path_above_mask_limit(spark, clustered_dir):
     """k > 63 switches the exactly-once filter to the array_intersect
     form (cluster ids no longer fit a BIGINT mask) — the branch a real
     k ~ sqrt(n) deployment runs. It must flow through the same
-    survivor-rescore structure and still recover the planted twins."""
+    survivor rescore (similarity.threshold_pairs) and still recover the
+    planted twins."""
     import numpy as np
 
     from orca_spark.operators.similarity import load_embeddings
