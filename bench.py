@@ -288,10 +288,11 @@ def main() -> None:
         # r08: the pair-scoring stage restructure (one 64-term dot chain
         # per codegen stage — see similarity.threshold_pairs) moved
         # the query from permanently-interpreted (~13 s flat) to
-        # JIT-compiled (~1.4 s steady), but run 0 now pays C2 compiling
-        # the huge generated method (~12 s). Extra runs so the median
-        # reads the compiled steady state a deployment runs in; the
-        # spread keeps the warmup cost visible.
+        # JIT-compiled (~1.4 s steady), but the first run in a JVM pays
+        # 25-50 s at sf0.1 (4 cores), likely C2 compiling the ~15 KB
+        # generated methods. Extra runs so the median reads the
+        # compiled steady state a deployment runs in; the spread keeps
+        # the warmup cost visible.
         "embedding_near_dup_pairs_ivf": runs_per_query + 4,
         # r10: a 3-run median caught this query's slow JIT-warmup tail
         # (isolated samples 3.26 -> 1.41 -> 1.09 -> ~0.85 steady) and

@@ -40,6 +40,7 @@ from orca_spark.operators.similarity import (
     load_embeddings,
 )
 from orca_spark.registry import register
+from orca_spark.session import conf_scope
 
 _K = 8
 _ITERS = 5
@@ -72,57 +73,53 @@ def kmeans_fit(
     # out): AQE's runtime re-planning buys nothing for that fixed
     # two-stage shape but costs an extra scheduling round + driver
     # re-optimization per iteration — measured ~2× on the whole fit at
-    # sf0.1, and the same fixed overhead per round on a cluster. Scoped
-    # off for the loop and restored after, the same pattern
-    # dedup.connected_components uses for its loop's shuffle width
+    # sf0.1, and the same fixed overhead per round on a cluster
     # (guide §1.2: config after algorithm — the algorithm here is
     # per-round model-sized aggregation, which AQE cannot improve).
     spark = emb.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        # distributed deterministic seed: bucket means of vec_id % k
-        seeded = emb.withColumn("cid", (F.col("vec_id") % k).cast("int"))
-        cents = _recompute(seeded, k, dim, prev=None)
-        inertia: list[float] = []
-        for _ in range(iters):
-            if compute_inertia:
-                # convergence signal: sum over rows of min_c ‖x − c‖², via
-                # the SAME struct-sort literal expression the assign path
-                # codegens (‖x‖² added back outside the argmin) — one agg
-                # job per round. Fixed-iteration fits skip it: it is a
-                # full extra corpus scan per round bought purely for the
-                # convergence readout.
-                stats = emb.agg(
-                    F.sum(
-                        _min_d2_sql(cents) + dot("e", "e", dim, validated=True)
-                    ).alias("inertia")
-                ).collect()[0]
-                inertia.append(float(stats["inertia"]))
-            assigned = ivf_assign(emb, cents, nprobe=1).select(
-                "e", F.col("clusters")[0].alias("cid")
-            )
-            new_cents = _recompute(assigned, k, dim, prev=dict(cents))
-            # early stop: the update is driver-side model data, so the
-            # fixed-point check is free — converged corpora skip the
-            # remaining iterations' scans. Epsilon tolerance, NOT exact
-            # equality: on a multi-executor cluster avg()'s partial-merge
-            # order varies run to run, so a converged assignment can
-            # still produce last-ulp-different centroids — exact
-            # comparison would silently never fire there (the sample
-            # trainer's array_equal check is safe only because numpy is
-            # single-process deterministic).
-            moved = max(
-                abs(x - y)
-                for (_, a), (_, b) in zip(cents, new_cents)
-                for x, y in zip(a, b)
-            )
-            cents = new_cents
-            if moved < 1e-9:
-                break
-        return cents, inertia
+        with conf_scope(spark, {"spark.sql.adaptive.enabled": "false"}):
+            # distributed deterministic seed: bucket means of vec_id % k
+            seeded = emb.withColumn("cid", (F.col("vec_id") % k).cast("int"))
+            cents = _recompute(seeded, k, dim, prev=None)
+            inertia: list[float] = []
+            for _ in range(iters):
+                if compute_inertia:
+                    # convergence signal: sum over rows of min_c ‖x − c‖², via
+                    # the SAME struct-sort literal expression the assign path
+                    # codegens (‖x‖² added back outside the argmin) — one agg
+                    # job per round. Fixed-iteration fits skip it: it is a
+                    # full extra corpus scan per round bought purely for the
+                    # convergence readout.
+                    stats = emb.agg(
+                        F.sum(
+                            _min_d2_sql(cents) + dot("e", "e", dim, validated=True)
+                        ).alias("inertia")
+                    ).collect()[0]
+                    inertia.append(float(stats["inertia"]))
+                assigned = ivf_assign(emb, cents, nprobe=1).select(
+                    "e", F.col("clusters")[0].alias("cid")
+                )
+                new_cents = _recompute(assigned, k, dim, prev=dict(cents))
+                # early stop: the update is driver-side model data, so the
+                # fixed-point check is free — converged corpora skip the
+                # remaining iterations' scans. Epsilon tolerance, NOT exact
+                # equality: on a multi-executor cluster avg()'s partial-merge
+                # order varies run to run, so a converged assignment can
+                # still produce last-ulp-different centroids — exact
+                # comparison would silently never fire there (the sample
+                # trainer's array_equal check is safe only because numpy is
+                # single-process deterministic).
+                moved = max(
+                    abs(x - y)
+                    for (_, a), (_, b) in zip(cents, new_cents)
+                    for x, y in zip(a, b)
+                )
+                cents = new_cents
+                if moved < 1e-9:
+                    break
+            return cents, inertia
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         emb.unpersist()
 
 

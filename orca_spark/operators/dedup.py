@@ -33,6 +33,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from orca_spark.registry import register
+from orca_spark.session import conf_scope, loop_width
 from orca_spark.tables import load
 from orca_spark.xxh64_sql import to_signed, xxh64
 
@@ -538,51 +539,33 @@ def connected_components(
     # subgraph the loop shuffles is already the post-contraction
     # representative set, which IS the scale-reduced frame.
     spark = nodes.sparkSession
-    prev_conf = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        # edges is referenced twice by the symmetrization union —
-        # materialize the caller's pair generation once, lazily (the
-        # sym checkpoint below is the single action that computes it)
-        edges = edges.localCheckpoint(eager=False)
-        # localCheckpoint (not persist): truncates the lineage each round
-        # so the k-th iteration plans a constant-size query, not a k-join
-        # one — without it, driver-side re-planning dominates.
-        sym = (
-            edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-            .union(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-            .union(nodes.select(F.col("doc_id").alias("src"), F.col("doc_id").alias("dst")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # The loop runs MANY small shuffles eagerly; under a session left
-        # at the default 200 shuffle partitions each round schedules ~600
-        # tiny tasks and fixed overhead dominates (measured 4× slower on
-        # the driver's plain session). Derive the loop's width from the
-        # materialized edge count (~50k rows/task) capped at the executor
-        # count — scale-adaptive, not a local-mode constant: a 100 TB
-        # subgraph still gets full parallelism, a small one stops paying
-        # 32 near-empty tasks per round — and restore afterwards; the
-        # returned labels are checkpointed, so downstream plans are
-        # unaffected.
-        width = max(
-            1,
-            min(
-                spark.sparkContext.defaultParallelism,
-                (sym.count() + 49_999) // 50_000,
-            ),
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", str(width))
-        # AQE off for the loop rounds only (the kmeans Lloyd's-loop
-        # finding, r12 Δ1, re-measured here: the loop's shuffle width is
-        # already derived from the materialized edge count above, so
-        # runtime re-planning buys nothing while splitting every
-        # round's single action into 3-4 sub-jobs — the event-log
-        # profile showed ~38 one-task jobs with ~0.15 s driver gaps for
-        # a 6-round loop). Restored in the same finally; the returned
-        # labels are checkpointed, so downstream plans see the caller's
-        # session config unchanged.
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    # edges is referenced twice by the symmetrization union —
+    # materialize the caller's pair generation once, lazily (the
+    # sym checkpoint below is the single action that computes it)
+    edges = edges.localCheckpoint(eager=False)
+    # localCheckpoint (not persist): truncates the lineage each round
+    # so the k-th iteration plans a constant-size query, not a k-join
+    # one — without it, driver-side re-planning dominates.
+    sym = (
+        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        .union(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
+        .union(nodes.select(F.col("doc_id").alias("src"), F.col("doc_id").alias("dst")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    # The loop runs MANY small shuffles eagerly; under a session left
+    # at the default 200 shuffle partitions each round schedules ~600
+    # tiny tasks and fixed overhead dominates (measured 4× slower on
+    # the driver's plain session), so the width follows the
+    # materialized edge count. AQE is off for the rounds: the width is
+    # already derived, so runtime re-planning only splits every round's
+    # single action into 3-4 sub-jobs (the event-log profile showed ~38
+    # one-task jobs with ~0.15 s driver gaps for a 6-round loop).
+    confs = {
+        "spark.sql.shuffle.partitions": str(loop_width(spark, sym.count())),
+        "spark.sql.adaptive.enabled": "false",
+    }
+    with conf_scope(spark, confs):
         labels = nodes.select("doc_id", F.col("doc_id").alias("label"))
         prev_sum = None
         for _ in range(max_iter):
@@ -609,9 +592,6 @@ def connected_components(
                 prev_sum = None  # converged
                 break
             prev_sum = cur_sum
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_conf)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     if prev_sum is not None:
         # silently-wrong labels are worse than a loud failure: a component
         # this deep has not converged in max_iter rounds

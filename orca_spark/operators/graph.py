@@ -26,6 +26,7 @@ from pyspark.sql.window import Window as W
 
 from orca_spark.operators.blocking import prefix_candidates
 from orca_spark.registry import register
+from orca_spark.session import conf_scope, loop_width
 from orca_spark.tables import load
 
 # Jaccard edge threshold as an exact rational (9/10): membership is
@@ -169,29 +170,17 @@ def label_propagation(
         .localCheckpoint(eager=True)  # reused every round
     )
 
-    # the fixed rounds run many small shuffles eagerly — derive their
-    # width from the materialized edge count (~50k rows/task, capped at
-    # the executor count; the connected_components convention) instead
-    # of paying near-empty tasks per round, and restore afterwards
+    # the fixed rounds run many small shuffles eagerly: their width
+    # follows the materialized edge count, and AQE is off for them (the
+    # connected_components finding) — with the width derived, runtime
+    # re-planning only splits each round's checkpoint job into
+    # per-stage sub-jobs
     spark = docs.sparkSession
-    prev_width = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    width = max(
-        1,
-        min(
-            spark.sparkContext.defaultParallelism,
-            (edges.count() + 49_999) // 50_000,
-        ),
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    # AQE off for the fixed rounds (the connected_components finding):
-    # the loop width is already derived from the materialized edge
-    # count, so runtime re-planning only splits each round's checkpoint
-    # job into per-stage sub-jobs; restored in the same finally, and the
-    # returned labels are checkpointed so downstream plans see the
-    # caller's session config unchanged.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    confs = {
+        "spark.sql.shuffle.partitions": str(loop_width(spark, edges.count())),
+        "spark.sql.adaptive.enabled": "false",
+    }
+    with conf_scope(spark, confs):
         for _ in range(rounds):
             votes = (
                 edges.join(
@@ -226,9 +215,6 @@ def label_propagation(
                 )
                 .localCheckpoint(eager=True)
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_width)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     return labels.select("doc_id", "label", "is_seed")
 
 

@@ -46,12 +46,12 @@ _MAX_DEPTH = 3
 # model-sized build side.
 _SQL = f"""
     WITH RECURSIVE paths (src, dst, depth, path) AS (
-        SELECT src, dst, 1, concat(src, '>', dst) FROM _rp_edges
+        SELECT src, dst, 1, concat(src, '>', dst) FROM {{edges}}
         UNION ALL
         SELECT /*+ BROADCAST(e) */
                p.src, e.dst, p.depth + 1, concat(p.path, '>', e.dst)
         FROM paths p
-        JOIN _rp_edges e ON e.src = p.dst
+        JOIN {{edges}} e ON e.src = p.dst
         WHERE p.depth < {_MAX_DEPTH}
     )
     SELECT src, dst, CAST(depth AS BIGINT) AS depth, path
@@ -97,8 +97,6 @@ _SQL = f"""
     "state) and the driver-side fixpoint loops (data-sized state)",
 )
 def sql_recursive_type_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("_rp_events")
     edges = spark.sql(
         """
         SELECT DISTINCT prev_type AS src, event_type AS dst
@@ -106,12 +104,12 @@ def sql_recursive_type_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT event_type,
                    lag(event_type) OVER (PARTITION BY user_id
                                          ORDER BY ts, event_id) AS prev_type
-            FROM _rp_events
+            FROM {events}
             WHERE ts IS NOT NULL AND event_type IS NOT NULL
               AND user_id IS NOT NULL
         )
         WHERE prev_type IS NOT NULL
-        """
+        """,
+        events=load(spark, sf_dir, "events"),
     ).localCheckpoint(eager=True)
-    edges.createOrReplaceTempView("_rp_edges")
-    return spark.sql(_SQL)
+    return spark.sql(_SQL, edges=edges)

@@ -84,7 +84,6 @@ def join_null_safe_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rule)",
 )
 def sql_parameterized_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load(spark, sf_dir, "orders").createOrReplaceTempView("_pq_orders")
     return spark.sql(
         """
         SELECT o_orderpriority,
@@ -92,11 +91,12 @@ def sql_parameterized_query(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(count(*) AS BIGINT) AS n_orders,
                CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
                     AS BIGINT) AS revenue_cents
-        FROM _pq_orders
+        FROM {orders}
         WHERE o_orderpriority = :priority
           AND o_totalprice >= :min_total
           AND o_orderdate IS NOT NULL
         GROUP BY 1, 2
         """,
         args={"priority": _PRIORITY, "min_total": _MIN_TOTAL},
+        orders=load(spark, sf_dir, "orders"),
     )

@@ -141,15 +141,14 @@ def correlated_subquery_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame
     description="explicit GROUPING SETS (subset of cube, one expand)",
 )
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("orca_gs_lineitem")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
                round(sum(l_quantity), 2) AS sum_qty
-        FROM orca_gs_lineitem
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
+        """,
+        lineitem=load(spark, sf_dir, "lineitem"),
     )
 
 

@@ -21,7 +21,8 @@ each with a value-level DuckDB oracle like every other query:
   a new physical strategy, and that is exactly what the test pins.
 * ``sql_cte_window_subquery`` — the pure-SQL entry: one
   ``spark.sql`` text combining a CTE, a correlated scalar subquery,
-  and a ranking window over temp views. Everything else in the engine
+  and a ranking window over DataFrames passed as ``spark.sql``
+  arguments. Everything else in the engine
   is DataFrame-first; this proves the equivalent SQL text plans and
   executes identically (same Catalyst, same physical operators).
 
@@ -165,14 +166,11 @@ def orders_lateral_topk_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     "an integer cross-multiplication, rank tie-broken on custkey",
 )
 def sql_cte_window_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load(spark, sf_dir, "customer").createOrReplaceTempView("v_customer")
-    load(spark, sf_dir, "nation").createOrReplaceTempView("v_nation")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
     return spark.sql(
         """
         WITH nat AS (
             SELECT c.c_custkey, n.n_name
-            FROM v_customer c JOIN v_nation n ON n.n_nationkey = c.c_nationkey
+            FROM {customer} c JOIN {nation} n ON n.n_nationkey = c.c_nationkey
         ),
         spend AS (
             -- money as BIGINT cents: the above-average predicate is an
@@ -182,7 +180,7 @@ def sql_cte_window_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT o.o_custkey, count(*) AS n_orders,
                    sum(CAST(round(o.o_totalprice * 100, 0) AS BIGINT))
                        AS cents
-            FROM v_orders o WHERE o.o_totalprice IS NOT NULL
+            FROM {orders} o WHERE o.o_totalprice IS NOT NULL
             GROUP BY o.o_custkey
         ),
         pop AS (
@@ -201,5 +199,8 @@ def sql_cte_window_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
             WHERE s.cents * pop.n_cust > pop.all_cents
         ) ranked
         WHERE rnk <= 3
-        """
+        """,
+        customer=load(spark, sf_dir, "customer"),
+        nation=load(spark, sf_dir, "nation"),
+        orders=load(spark, sf_dir, "orders"),
     )

@@ -217,8 +217,8 @@ def text_tokens_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("orca_tokenize", Tokenize)
     docs = load(spark, sf_dir, "documents")
-    docs.select("doc_id", "text").createOrReplaceTempView("orca_udtf_docs")
     return spark.sql(
         "SELECT doc_id, t.token, t.token_idx "
-        "FROM orca_udtf_docs, LATERAL orca_tokenize(text) t"
+        "FROM {docs}, LATERAL orca_tokenize(text) t",
+        docs=docs.select("doc_id", "text"),
     )

@@ -15,6 +15,8 @@ below are chosen so the same code holds on a 1000-executor cluster:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -136,3 +138,30 @@ def configure_session(spark: SparkSession) -> SparkSession:
     except Exception:
         pass  # static conf on some builds; get_spark sets it at build time
     return spark
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the body, then put each key back
+    as it was: its old value, or unset if it had none. The confs are
+    session-wide, so callers scope only eager driver-side work whose
+    outputs are checkpointed or written before the scope closes."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def loop_width(spark: SparkSession, n_rows: int) -> int:
+    """Shuffle width for a driver loop over ``n_rows`` materialized rows:
+    ~50k rows per task, capped at the executor count, so a small input
+    stops paying near-empty tasks every round."""
+    tasks = (n_rows + 49_999) // 50_000
+    return max(1, min(spark.sparkContext.defaultParallelism, tasks))

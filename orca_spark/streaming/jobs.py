@@ -28,6 +28,7 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from orca_spark.registry import register
@@ -60,18 +61,20 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
+def drain(writer: DataStreamWriter) -> StreamingQuery:
+    """Run a stream over everything available now, wait for it to finish
+    and return the finished query (its ``recentProgress`` holds the
+    per-batch metrics)."""
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
+
+
 def run_to_memory(df: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Drive a bounded stream to completion into a memory sink and return
     the materialized result table."""
     name = "orca_stream_" + uuid.uuid4().hex[:12]
-    q = (
-        df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(df.writeStream.outputMode(output_mode).format("memory").queryName(name))
     return df.sparkSession.table(name)
 
 
@@ -199,13 +202,7 @@ def streaming_foreach_batch_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_df.write.mode("overwrite").orc(f"{out}/epoch={epoch_id}")
 
     ev = stream_events(spark, sf_dir)
-    q = (
-        ev.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(ev.writeStream.foreachBatch(sink).option("checkpointLocation", ckpt))
     back = spark.read.orc(out)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),

@@ -58,6 +58,8 @@ from orca_spark.operators.pipeline5 import (
     group_manifest,
 )
 from orca_spark.registry import REGISTRY, register
+from orca_spark.session import conf_scope
+from orca_spark.streaming.jobs import drain
 
 
 def streaming_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -194,13 +196,10 @@ def streaming_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ---- the continuous ingest: raw delta docs stream in, curation
     # runs per micro-batch against the persisted artifacts only.
 
-    # the frozen model artifacts never change after the history write —
-    # bind their frames ONCE; the growing key indexes must re-list their
-    # (appended) files per batch, but an explicit schema skips the
-    # footer-read schema-inference job each read otherwise pays
-    frozen_mdl = spark.read.parquet(model_cc)
-    frozen_scal = spark.read.parquet(model_scal)
-
+    # each micro-batch reads the artifacts on its own session with an
+    # explicit schema (the frozen model's from its already-bound frames),
+    # which skips the footer-read schema-inference job a read otherwise
+    # pays; the growing key indexes re-list their appended files per batch
     def curate_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
         gated = gate_rows(batch_df)
@@ -226,8 +225,8 @@ def streaming_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
         d_tok = d_corpus.select("doc_id", F.explode("toks").alias("w"))
-        mscal = frozen_scal
-        mdl = frozen_mdl
+        mdl = s.read.schema(model_p.schema).parquet(model_cc)
+        mscal = s.read.schema(scal_p.schema).parquet(model_scal)
         d_manifest = group_manifest(
             d_corpus,
             dsir_scores(
@@ -271,15 +270,12 @@ def streaming_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema = delta_raw.schema
 
         def run_pass() -> None:
-            q = (
+            drain(
                 spark.readStream.schema(schema)
                 .parquet(in_dir)
                 .writeStream.foreachBatch(curate_batch)
                 .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
             )
-            q.awaitTermination()
 
         # AQE off across the micro-batch passes (the loop-round finding
         # from CC/kmeans applied to foreachBatch): each batch runs ~5
@@ -287,17 +283,13 @@ def streaming_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # AQE splits every one into per-stage sub-jobs — pure scheduling
         # rounds here. The main thread is blocked in awaitTermination
         # while the batches plan, so the scoped setting cannot leak into
-        # concurrent work; restored in the finally.
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        try:
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
+        # concurrent work.
+        with conf_scope(spark, {"spark.sql.adaptive.enabled": "false"}):
             run_pass()
             delta_raw.where(F.col("doc_id") > mid).write.mode(
                 "append"
             ).parquet(in_dir)
             run_pass()
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
     merged = (
         spark.read.schema(

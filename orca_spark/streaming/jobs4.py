@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from orca_spark.registry import register
+from orca_spark.streaming.jobs import drain
 
 
 def run_available_now(
@@ -26,15 +27,12 @@ def run_available_now(
     """One incremental pass: stream whatever is new in ``in_dir`` into
     the exactly-once parquet sink, return rows processed THIS pass."""
     stream = spark.readStream.schema(schema).parquet(in_dir)
-    q = (
+    q = drain(
         stream.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return sum(int(p["numInputRows"]) for p in q.recentProgress)
 
 

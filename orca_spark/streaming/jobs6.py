@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from orca_spark.registry import register
+from orca_spark.streaming.jobs import drain
 
 _KEY = ["user_id", "event_type"]
 
@@ -99,15 +100,12 @@ def streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(in_dir).schema
 
     def run_pass() -> None:
-        q = (
+        drain(
             spark.readStream.schema(schema)
             .parquet(in_dir)
             .writeStream.foreachBatch(merge_batch)
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
     run_pass()
     ev.where(batch == 1).write.mode("append").parquet(in_dir)

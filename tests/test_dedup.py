@@ -137,8 +137,12 @@ def test_connected_components_nonconvergence_raises(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 7)], "doc_a long, doc_b long"
     )
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k, None) for k in keys}
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(nodes, chain, max_iter=2)
+    # the loop's scoped width and AQE setting are restored on the raise
+    assert {k: spark.conf.get(k, None) for k in keys} == before
 
 
 def test_multimodal_decode_plumbing(spark):

@@ -36,6 +36,7 @@ import pytest
 
 from orca_spark.registry import REGISTRY
 import orca_spark.queries  # noqa: F401  (populates the registry)
+from orca_spark.session import conf_scope
 from tests.conftest import SF_DIR_ORACLE, SIDE_EFFECTING_PREFIXES, normalize
 
 pytestmark = pytest.mark.skipif(
@@ -63,23 +64,8 @@ NAMES = sorted(
 
 
 def _run_under(spark, fn, conf: dict[str, str]) -> pd.DataFrame:
-    old = {}
-    for k, v in conf.items():
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, conf):
         return normalize(fn(spark, SF_DIR_ORACLE).toPandas())
-    finally:
-        for k, v in old.items():
-            if v is not None:
-                spark.conf.set(k, v)
-            else:
-                # the original value was unreadable: unset rather than
-                # leak this regime's value into the shared session
-                spark.conf.unset(k)
 
 
 def test_all_oracled_queries_are_covered():

@@ -11,6 +11,7 @@ import re
 import pytest
 
 from orca_spark.queries import queries
+from orca_spark.session import conf_scope
 from tests.conftest import SF_DIR
 
 _Q = queries()
@@ -71,12 +72,8 @@ def test_bucketed_join_has_no_exchange(spark):
     assert pair is not None, "catalog could not persist bucketed tables"
     # at tiny SF Catalyst prefers broadcast (also shuffle-free); disable it
     # to expose the bucketed sort-merge path the plan relies on at scale
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         p = plan_str(spark, "bucketed_join_orders_lineitem")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert "Bucketed: true" in p
     assert "SortMergeJoin" in p
     # no Exchange may feed the join inputs (scan → sort → join directly)
@@ -763,10 +760,8 @@ def test_pair_scan_scoring_is_stage_split(spark):
     ``2 x defaultParallelism`` (the exact scans' spread count) and
     ``max(2 x defaultParallelism, 16)`` (the IVF spread count)."""
     dp = spark.sparkContext.defaultParallelism
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        for parts in sorted({2 * dp, max(2 * dp, 16)}):
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    for parts in sorted({2 * dp, max(2 * dp, 16)}):
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": str(parts)}):
             for name in [
                 "embedding_near_dup_pairs",
                 "embedding_near_dup_pairs_ivf",
@@ -800,8 +795,6 @@ def test_pair_scan_scoring_is_stage_split(spark):
                     assert _has_join_below(tree, node), (
                         f"{at}: (vec_a, vec_b) exchange ({node}) not above the pair join"
                     )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_span_scrub_hashed_shuffles_only_on_longs(spark):
