@@ -166,7 +166,12 @@ def rows_to_df(
     *,
     lenient: bool = False,
 ) -> DataFrame:
-    """The DataFrame :func:`write_rows` writes: rows as Arrow record batches.
+    """Driver-side rows → DataFrame, as Arrow record batches.
+
+    The one way ``orca_spark`` builds a frame from local rows: the
+    DataFrame :func:`write_rows` writes, and every operator's small
+    driver-built table (merge lists, centroids, query batches). No row
+    is pickled through a Python worker.
 
     Strict rows pass the check ``createDataFrame(..., verifySchema=True)``
     runs (a bad cell raises). Lenient rows keep the reference's

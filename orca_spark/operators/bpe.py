@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from orca_spark import memo
+from orca_spark.io import rows_to_df
 from orca_spark.registry import register
 from orca_spark.tables import load
 
@@ -148,7 +149,8 @@ def bpe_train(
     pairs with map-side combine; the argmax is a single-row collect
     (the scalar that steers the next step — same bounded pattern as
     connected components' convergence sum). The vocabulary table is
-    localCheckpoint'ed each step so the rewrite lineage never stacks.
+    rewritten and localCheckpoint'ed after every merge but the last, so
+    the rewrite lineage never stacks.
 
     ``cache_key`` (the corpus dir) memoizes the merges in orca_spark.memo.
     """
@@ -182,6 +184,8 @@ def bpe_train(
             break  # vocabulary fully merged — nothing adjacent remains
         left, right, n = top[0].l, top[0].r, top[0].n
         merges.append((rank, left, right, int(n)))
+        if rank == n_merges - 1:
+            break  # nothing reads the vocabulary after the last merge
 
         joined = left + right
 
@@ -254,6 +258,6 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("freq"))
     )
     merges = bpe_train(words, cache_key=sf_dir)
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, pair_count long"
+    return rows_to_df(
+        spark, merges, "rank int, left string, right string, pair_count long"
     )

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orca_spark.io import rows_to_df
 from orca_spark.operators.similarity import (
     _DIM,
     centroid_structs_sql,
@@ -201,11 +202,13 @@ def embeddings_kmeans_distributed(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.count(F.lit(1)).alias("n_assigned"))
         .collect()
     )
-    sizes = spark.createDataFrame(
+    sizes = rows_to_df(
+        spark,
         [(int(r.cluster_id), int(r.n_assigned)) for r in sizes_rows],
         "cluster_id int, n_assigned long",
     )
-    cdf = spark.createDataFrame(
+    cdf = rows_to_df(
+        spark,
         [(cid, vec) for cid, vec in cents], "cluster_id int, c array<double>"
     ).select(
         "cluster_id",
@@ -242,8 +245,8 @@ def embeddings_kmeans_vs_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     smap = dict(sampled)
     for cid, vec in full:
         rows.append((cid, vec, smap[cid]))
-    df = spark.createDataFrame(
-        rows, "cluster_id int, c_full array<double>, c_sample array<double>"
+    df = rows_to_df(
+        spark, rows, "cluster_id int, c_full array<double>, c_sample array<double>"
     )
     cos = dot("c_full", "c_sample", validated=True) / (
         F.sqrt(dot("c_full", "c_full", validated=True))

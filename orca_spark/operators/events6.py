@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orca_spark.io import rows_to_df
 from orca_spark.registry import register
 from orca_spark.tables import load
 
@@ -130,7 +131,7 @@ def _hourly_series(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_acf_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     series = _hourly_series(spark, sf_dir).localCheckpoint(eager=False)
-    lags = spark.createDataFrame([(k,) for k in _ACF_LAGS], "lag int")
+    lags = rows_to_df(spark, [(k,) for k in _ACF_LAGS], "lag int")
     shifted = series.select(F.col("h").alias("h2"), F.col("n").alias("y"))
     pairs = (
         series.crossJoin(F.broadcast(lags))

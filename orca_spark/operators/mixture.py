@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orca_spark.io import rows_to_df
 from orca_spark.registry import register
 from orca_spark.tables import load
 
@@ -94,9 +95,7 @@ def corpus_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # presence binds the plan at T*=0 instead of silently vanishing (an
     # inner join would report over-optimistic "feasible" budgets for a
     # mixture the corpus cannot actually serve); its rate is NULL (0/0).
-    weights_df = spark.createDataFrame(
-        list(_WEIGHTS.items()), "lang string, weight_pct int"
-    )
+    weights_df = rows_to_df(spark, list(_WEIGHTS.items()), "lang string, weight_pct int")
     caps = (
         weights_df.join(F.broadcast(inv), "lang", "left")
         .withColumn("tokens", F.coalesce("tokens", F.lit(0).cast("long")))

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from orca_spark.io import rows_to_df
 from orca_spark.operators.similarity import _with_norm, dot, load_embeddings
 from orca_spark.operators.text6 import _BM25_QUERY, bm25_scores_df
 from orca_spark.registry import register
@@ -284,7 +285,8 @@ def retrieval_hybrid_rrf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.col("w") != "")
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     qt = F.broadcast(
-        spark.createDataFrame(
+        rows_to_df(
+            spark,
             [(qid, w) for qid, terms in _BATCH.items() for w in terms],
             "query_id int, w string",
         )

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orca_spark.io import rows_to_df
 from orca_spark.registry import register
 from orca_spark.tables import load
 
@@ -142,7 +143,8 @@ def events_observed_ingest_metrics(spark: SparkSession, sf_dir: str) -> DataFram
     # coerce only non-NULL values (float(None) would crash on an empty
     # table where the oracle returns a row of NULLs + count 0)
     tv = row["total_value"]
-    return spark.createDataFrame(
+    return rows_to_df(
+        spark,
         [
             (
                 row["n_rows"],

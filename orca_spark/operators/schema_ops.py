@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orca_spark.io import rows_to_df
 from orca_spark.registry import register
 from orca_spark.schema import merge_types, to_ddl
 from orca_spark.tables import load
@@ -87,7 +88,8 @@ def schema_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     sa = spark.read.json(f"{base}/a").schema
     sb = spark.read.json(f"{base}/b").schema
     rows = schema_drift(sa, sb)
-    return spark.createDataFrame(
+    return rows_to_df(
+        spark,
         rows,
         "column string, type_a string, type_b string, merged string, change string",
     ).orderBy("column")

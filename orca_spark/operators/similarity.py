@@ -21,6 +21,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from orca_spark import memo
+from orca_spark.io import rows_to_df
 from orca_spark.registry import register
 from orca_spark.tables import load
 
@@ -543,7 +544,8 @@ def ivf_assign_join(
     """
     spark = emb.sparkSession
     dim = len(centroids[0][1])
-    cdf = spark.createDataFrame(
+    cdf = rows_to_df(
+        spark,
         [(cid, [float(v) for v in vec], float(sum(v * v for v in vec)))
          for cid, vec in centroids],
         "cid int, cvec array<double>, c2 double",

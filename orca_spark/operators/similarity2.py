@@ -31,6 +31,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from orca_spark import memo
+from orca_spark.io import rows_to_df
 from orca_spark.operators.similarity import (
     _N_QUERIES,
     _TOP_K,
@@ -313,7 +314,7 @@ def pq_encode_join(
         for c, cw in enumerate(book)
     ]
     books_df = F.broadcast(
-        spark.createDataFrame(book_rows, "s int, code int, cw array<double>, cw2 double")
+        rows_to_df(spark, book_rows, "s int, code int, cw array<double>, cw2 double")
     )
     ccw_rows = [
         (int(cid), s, c,
@@ -323,7 +324,7 @@ def pq_encode_join(
         for c, cw in enumerate(book)
     ]
     ccw_df = F.broadcast(
-        spark.createDataFrame(ccw_rows, "cluster int, s int, code int, ccw double")
+        rows_to_df(spark, ccw_rows, "cluster int, s int, code int, ccw double")
     )
     carried = [c for c in assigned.columns]
     fanned = assigned.withColumn("s", F.explode(F.lit(list(range(m))))).withColumn(
@@ -483,7 +484,8 @@ def pq_topk_df(
     if not qrows:
         # an empty query set would make np.array([...]) 0-d and
         # qmat[:, None, :] raise — return the (empty) result directly
-        return spark.createDataFrame(
+        return rows_to_df(
+            spark,
             [], "query_id long, neighbor_id long, cosine double, rank int"
         )
     qids = [int(r.vec_id) for r in qrows]
@@ -513,7 +515,8 @@ def pq_topk_df(
                 )
             )
     q = F.broadcast(
-        spark.createDataFrame(
+        rows_to_df(
+            spark,
             q_rows,
             "query_id long, qe array<double>, cluster int, qc double,"
             " qlut array<array<double>>",

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orca_spark.io import rows_to_df
 from orca_spark.registry import register
 from orca_spark.tables import load
 
@@ -183,7 +184,8 @@ def heavy_hitters_cms_df(
         (str(r[key]) if key_is_str else int(r[key]), int(r["exact_n"]), _est(r[key]))
         for r in cands
     ]
-    out = spark.createDataFrame(
+    out = rows_to_df(
+        spark,
         rows, f"{key} {'string' if key_is_str else 'long'}, exact_n long, cms_n long"
     )
     return out.select(

@@ -158,8 +158,9 @@ def orders_lateral_topk_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE rnk <= 3
     """,
     description="the pure-SQL engine surface: one spark.sql text over "
-    "temp views combining a CTE, a correlated-scalar subquery (spend "
-    "above the all-customer average), and a per-nation ranking window "
+    "its three tables passed as DataFrame arguments, combining a CTE, "
+    "a correlated-scalar subquery (spend above the all-customer "
+    "average), and a per-nation ranking window "
     "keeping each nation's top-3 spenders — proves SQL text plans "
     "through the same Catalyst pipeline as the DataFrame surface; "
     "money carried as BIGINT cents so the above-average predicate is "

@@ -32,33 +32,23 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from orca_spark.registry import register
+from orca_spark.tables import normalize_timestamps, parquet_schema
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet as a bounded stream (schema pinned from the batch
-    footer; nanosecond ts column normalized to a µs timestamp exactly
-    like tables.load does for batch)."""
-    from orca_spark.tables import load
-
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    """events.parquet as a bounded stream. Its schema is the batch
+    table's, read from the footer by ``tables.parquet_schema`` (no
+    job); timestamp columns are normalized to µs TIMESTAMPs by
+    ``tables.normalize_timestamps``, exactly as ``tables.load`` does
+    for batch."""
     # file-stream sources want a directory; select just the events table
     # out of the shared sf_dir with a glob filter
     stream = (
-        spark.readStream.schema(batch_schema)
+        spark.readStream.schema(parquet_schema(spark, f"{sf_dir}/events.parquet"))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    for field in batch_schema.fields:
-        if field.name == "ts" and field.dataType.simpleString() == "bigint":
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
-            )
-        elif field.dataType.simpleString() == "timestamp_ntz":
-            # naive parquet timestamps read as TIMESTAMP_NTZ break
-            # withWatermark (requires TIMESTAMP); UTC session tz makes
-            # this cast value-preserving
-            stream = stream.withColumn(field.name, F.col(field.name).cast("timestamp"))
-    return stream
+    return normalize_timestamps(stream)
 
 
 def drain(writer: DataStreamWriter) -> StreamingQuery:

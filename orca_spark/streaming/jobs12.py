@@ -47,6 +47,7 @@ from orca_spark.operators.pipeline4 import gate_rows
 from orca_spark.registry import register
 from orca_spark.streaming.jobs import run_to_memory
 from orca_spark.streaming.jobs5 import tws_available
+from orca_spark.tables import parquet_schema
 
 # the oracle's gate mirror reuses pipeline4's published SQL fragment
 from orca_spark.operators.pipeline5 import _GATE_SQL
@@ -55,9 +56,8 @@ from orca_spark.operators.pipeline5 import _GATE_SQL
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet as a bounded stream (schema pinned from the
     batch footer; jobs.stream_events's pattern for the shared dir)."""
-    batch_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     return (
-        spark.readStream.schema(batch_schema)
+        spark.readStream.schema(parquet_schema(spark, f"{sf_dir}/documents.parquet"))
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )

@@ -49,6 +49,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from orca_spark.io import rows_to_df
 from orca_spark.operators.pipeline4 import _PREFIX_TOKS, gate_rows, gated_docs
 from orca_spark.operators.pipeline5 import (
     _SPLIT_DEN,
@@ -90,7 +91,8 @@ def streaming_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # nothing survives the gate: the oracle's thr CTE is NULL, both
         # splits compare doc_id against NULL, and the manifest is empty
         return finalize_manifest(
-            spark.createDataFrame(
+            rows_to_df(
+                spark,
                 [],
                 "lang string, source string, n_docs long, n_tokens long, "
                 "sum_dsir_e4 long, n_docs_delta long",

@@ -59,3 +59,15 @@ def test_trainers_agree_when_sample_is_corpus(spark):
         assert r.trainer_cosine >= 0.95, (
             f"cluster {r.cluster_id}: trainer cosine {r.trainer_cosine}"
         )
+
+
+def test_centroid_frames_reach_jvm_without_python_worker(spark):
+    """The centroid and cluster-size tables embeddings_kmeans_distributed
+    builds on the driver are Arrow-fed: no PythonRDD in the lineage of
+    the frame it returns."""
+    from orca_spark.queries import queries
+
+    df = queries()["embeddings_kmeans_distributed"](spark, SF_DIR)
+    lineage = df._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+    assert df.count() == 8

@@ -5,7 +5,9 @@
   scoped changes);
 * SQL text sees DataFrames as ``spark.sql`` arguments, never as
   session-global temp views;
-* the driver-loop width policy lives in ``session.loop_width``.
+* the driver-loop width policy lives in ``session.loop_width``;
+* a frame is built from driver-side rows only by ``io.rows_to_df``
+  (Arrow record batches, no Python worker).
 """
 
 import ast
@@ -64,3 +66,8 @@ def test_no_session_global_temp_views():
 def test_loop_width_policy_has_one_copy():
     hits = _hits(r"49_999")
     assert len(hits) == 1, f"use session.loop_width: {hits}"
+
+
+def test_local_frames_are_built_only_in_io():
+    hits = [h for h in _hits(r"createDataFrame\(") if not h.startswith("orca_spark/io.py:")]
+    assert not hits, f"build frames from driver-side rows with io.rows_to_df: {hits}"

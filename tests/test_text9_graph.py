@@ -90,6 +90,18 @@ def test_bpe_deterministic(bpe_words):
     assert bpe_train(bpe_words, n_merges=5) == bpe_train(bpe_words, n_merges=5)
 
 
+def test_bpe_merge_table_reaches_jvm_without_python_worker(spark):
+    """text_bpe_train_merges builds its merge table from driver-side rows
+    as Arrow record batches: no PythonRDD in its lineage."""
+    from orca_spark.queries import queries
+    from tests.conftest import SF_DIR
+
+    df = queries()["text_bpe_train_merges"](spark, SF_DIR)
+    lineage = df._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+    assert [r["rank"] for r in df.collect()] == list(range(6))
+
+
 # ------------------------------------------------- label propagation
 
 _CLUSTER_A = (
