@@ -11,10 +11,11 @@ the way a 100 TB corpus forces it to be:
    frequency (JVM-side `transform`/`explode`, map-side partial agg),
    pick the argmax pair — a ONE-ROW driver collect, the iterative
    scalar every trainer needs — and rewrite the symbol arrays with a
-   left-to-right non-overlapping merge (a JVM-side ``aggregate`` fold:
-   the rewrite is inherently sequential WITHIN a word, embarrassingly
-   parallel ACROSS the vocabulary, and never crosses the Python
-   boundary).
+   left-to-right non-overlapping merge (JVM-side mark-and-``replace``:
+   each symbol maps to one mask char, and one scan-forward ``replace``
+   of the pair pattern IS the greedy pairing — linear within a word,
+   embarrassingly parallel ACROSS the vocabulary, and never crossing
+   the Python boundary).
 
 ``text_bpe_train_merges`` returns the learned merge table
 (rank, left, right, pair_count) — the artifact a tokenizer ships.
@@ -242,8 +243,10 @@ def bpe_train(
     description=f"distributed BPE tokenizer training ({_N_MERGES} merges): "
     "one corpus pass builds the (word, freq) vocabulary, then each step "
     "counts adjacent symbol pairs JVM-side, collects the single argmax "
-    "row, and rewrites symbol arrays with a JVM-side left-to-right fold "
-    "merge; the merge sequence is deterministic (integer counts, total "
+    "row, and rewrites symbol arrays JVM-side with a linear "
+    "mark-and-replace pass (one scan-forward replace of the pair's mask "
+    "pattern is the greedy left-to-right non-overlapping merge); the "
+    "merge sequence is deterministic (integer counts, total "
     "tie-break), so it is hash-checked against a DuckDB oracle that "
     "unrolls the loop as chained CTEs, plus a pure-Python reference "
     "replay (tests/test_text9_graph.py)",

@@ -3,7 +3,7 @@
 ``events_session_window_batch`` — the engine already sessionizes two
 ways: the hand-rolled gaps-and-islands form (``events_sessionize``,
 lag + running sum) and the streaming ``session_window`` job
-(jobs2.py). This operator is the third corner: Spark's built-in
+(streaming/jobs.py). This operator is the third corner: Spark's built-in
 ``F.session_window`` in BATCH mode, the one-line API users reach for
 first. Its semantics differ from the hand-rolled form in exactly one
 observable way, and the surface makes that explicit: a session's END

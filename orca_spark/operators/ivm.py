@@ -16,7 +16,7 @@ the entire correctness burden of incremental maintenance.
 
 The same partial-state discipline appears elsewhere in the engine:
 persisted HLL sketch unions (profile2) for distinct counts, and the
-streaming stateful totals (jobs) for the unbounded case.
+streaming stateful totals (streaming.stateful) for the unbounded case.
 
 Reference parity: the reference (core.clj) computes only whole-file
 ``stats`` (core.clj:220-226); incrementality is added engine surface.

@@ -107,8 +107,8 @@ def gate_rows(docs: DataFrame) -> DataFrame:
     lang, source) rows that pass the word-count, mean-word-length, and
     stopword-hit rules, tokenized — columns (doc_id, lang, source,
     text, toks, n_words). One implementation site (pipeline4,
-    pipeline5, streaming jobs12) so composites can never drift on gate
-    semantics."""
+    pipeline5, streaming.stateful, streaming.ingest) so composites can
+    never drift on gate semantics."""
     docs = docs.where(
         F.col("text").isNotNull()
         & F.col("lang").isNotNull()

@@ -95,8 +95,9 @@ def dsir_scores(
     (total_c, v), tt: (total_t,)). ``frozen=True`` left-joins the model
     — an unseen term costs c=0 and the add-1 smoothing absorbs it, the
     apply-importance-weights-to-new-data shape (Xie 2023). Shared by
-    the batch IVM delta pass and the streaming curation twin (jobs13),
-    which reads the same model from its persisted parquet form."""
+    the batch IVM delta pass and the streaming curation twin
+    (streaming.ingest), which reads the same model from its persisted
+    parquet form."""
     how = "left" if frozen else "inner"
     cc_term = F.coalesce(F.col("c_c"), F.lit(0)) if frozen else F.col("c_c")
     return (

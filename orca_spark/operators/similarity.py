@@ -372,25 +372,26 @@ def annotate_lexical_jaccard(sem: DataFrame, docs: DataFrame) -> DataFrame:
     """Annotate semantic candidate pairs ``(doc_a, doc_b, raw)`` with
     their token-set Jaccard.
 
-    Intersections come from two joins keyed by the (small) candidate
-    set — never the token×token self-join, whose hot words make it
-    quadratic on any real corpus. Shared by the exact (oracle) and
-    IVF-bucketed (scale) forms of the semantic-vs-lexical view.
+    Intersections are keyed by the (small) candidate set — never the
+    token×token self-join, whose hot words make it quadratic on any real
+    corpus — and the candidates are scanned once: each pair is
+    left-joined to its first doc's tokens, then to the second doc's equal
+    tokens, and ``count(tb.w)`` counts the shared ones. A pair whose docs
+    have no tokens or share none keeps its row with ``i = 0``. Shared by
+    the exact (oracle) and IVF-bucketed (scale) forms of the
+    semantic-vs-lexical view.
     """
     tok = docs.select("doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("w"))
     sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    inter = (
-        sem.select("doc_a", "doc_b")
-        .join(tok.alias("ta"), F.col("ta.doc_id") == F.col("doc_a"))
+    out = (
+        sem.join(tok.alias("ta"), F.col("ta.doc_id") == F.col("doc_a"), "left")
         .join(
             tok.alias("tb"),
             (F.col("tb.doc_id") == F.col("doc_b")) & (F.col("ta.w") == F.col("tb.w")),
+            "left",
         )
-        .groupBy(F.col("doc_a").alias("ia"), F.col("doc_b").alias("ib"))
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    out = (
-        sem.join(inter, (F.col("ia") == F.col("doc_a")) & (F.col("ib") == F.col("doc_b")), "left")
+        .groupBy("doc_a", "doc_b", "raw")
+        .agg(F.count("tb.w").alias("i"))
         .join(sizes.alias("za"), F.col("za.doc_id") == F.col("doc_a"), "left")
         .join(sizes.alias("zb"), F.col("zb.doc_id") == F.col("doc_b"), "left")
     )

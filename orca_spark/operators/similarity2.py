@@ -190,9 +190,9 @@ def semantic_vs_lexical_dedup_bucketed(spark: SparkSession, sf_dir: str) -> Data
     from orca_spark.operators.similarity import annotate_lexical_jaccard
 
     emb = load_embeddings(spark, sf_dir)
-    # the candidate set is tiny (near-dup pairs) but feeds THREE joins in
-    # the annotation — materialize it once or the whole IVF pipeline
-    # (assignment, bucket join, exact verify) re-executes per branch
+    # the candidate set is tiny (near-dup pairs): materialize it once so
+    # the whole IVF pipeline (assignment, bucket join, exact verify) runs
+    # before the annotation is planned, never inside its join stages
     sem = (
         ivf_near_dup_pairs(emb, cache_key=sf_dir)
         .select(

@@ -17,7 +17,6 @@ from orca_spark.registry import REGISTRY, QuerySpec
 from orca_spark.operators import similarity2, similarity  # noqa: F401
 from orca_spark.operators import text6  # noqa: F401  (new in r05: TF-IDF/BM25)
 from orca_spark.operators import multimodal  # noqa: F401
-from orca_spark.streaming import jobs, jobs3, jobs2, jobs4  # noqa: F401
 from orca_spark.operators import (  # noqa: F401
     io_ops,
     io_ops2,
@@ -58,7 +57,6 @@ from orca_spark.operators import (  # noqa: F401
     langid,
     sketches,
 )
-from orca_spark.streaming import jobs5  # noqa: F401
 
 # Long-verified tail (green rows in r01-r04, or no-oracle scale paths
 # whose driver check is rows-only and whose real gate is the local
@@ -112,9 +110,8 @@ from orca_spark.operators import (  # noqa: F401
     relational8,
 )
 
-# r05 batch 6: the composed corpus pipeline + the streaming MERGE INTO.
+# r05 batch 6: the composed corpus pipeline.
 from orca_spark.operators import pipeline  # noqa: F401
-from orca_spark.streaming import jobs6  # noqa: F401
 
 # r05 batch 7: MapType pipelines + observation-piggybacked metrics,
 # asymmetric containment dedup.
@@ -139,9 +136,8 @@ from orca_spark.operators import paths, privacy, stats3  # noqa: F401
 from orca_spark.operators import packing, events4, graph2  # noqa: F401
 
 # r07 batch 3: count-preserving dedup, source KL drift, embedding
-# outliers, watermark-evictable streaming dedup.
+# outliers.
 from orca_spark.operators import dedup4, text12, embeddings4  # noqa: F401
-from orca_spark.streaming import jobs7  # noqa: F401
 
 # r07 batch 4: l-diversity audit, ordered funnel, Zipf fit.
 from orca_spark.operators import privacy2, events5, text13  # noqa: F401
@@ -156,10 +152,8 @@ from orca_spark.operators import langid2  # noqa: F401
 # hashing-trick featurizer, composed chunk-dedup RAG index.
 from orca_spark.operators import relational9, text15, pipeline2  # noqa: F401
 
-# r07 batch 7: custom Python DataSource (Spark 4 API) round-trip,
-# sliding-window streaming aggregation.
+# r07 batch 7: custom Python DataSource (Spark 4 API) round-trip.
 from orca_spark.sources import jsonl  # noqa: F401
-from orca_spark.streaming import jobs8  # noqa: F401
 
 # r07 batch 8: node-level near-dup graph analytics (local clustering
 # coefficient, fixed-round k-core, common-neighbor link prediction).
@@ -196,10 +190,8 @@ from orca_spark.operators import spark4  # noqa: F401
 # hourly correlation map.
 from orca_spark.operators import timeseries3  # noqa: F401
 
-# r07 batch 16: the partitioned Python STREAMING source (jsonl shards
-# replayed by offset) and the mapInArrow zero-copy digest path.
+# r07 batch 16: the mapInArrow zero-copy digest path.
 from orca_spark.operators import multimodal3  # noqa: F401
-from orca_spark.streaming import jobs9  # noqa: F401
 
 # r07 batch 17: built-in batch session_window, join-strategy hints,
 # and the try_* ANSI-safe arithmetic surface.
@@ -228,11 +220,6 @@ from orca_spark.operators import analytics4  # noqa: F401
 # embed-join -> per-language budget pack), r07 verdict item 8.
 from orca_spark.operators import pipeline3  # noqa: F401
 
-# r08 batch 2: the rest of the transformWithStateInPandas state family
-# (ListState last-K buffer, MapState sub-keyed counts) — unlocked by
-# the vendored protobuf runtime (orca_spark/vendor.py).
-from orca_spark.streaming import jobs10  # noqa: F401
-
 # r08 batch 3: CUSUM change-point localization, the published Gopher
 # quality-rule scorecard + zlib compression-ratio signal, and the
 # per-dimension embedding distribution monitor.
@@ -249,10 +236,6 @@ from orca_spark.operators import analytics5, multimodal4, relational14  # noqa: 
 
 # r08 batch 6: dynamic-gap session windows (per-event timeouts).
 from orca_spark.operators import events12  # noqa: F401
-
-# r08 batch 7: TWS event-time timers (emit-on-quiet flush) — completes
-# the transformWithStateInPandas facility coverage.
-from orca_spark.streaming import jobs11  # noqa: F401
 
 # r08 batch 8: paper-backed curation trio — DSIR importance weights,
 # CCNet perplexity terciles, inverted-index postings summary.
@@ -276,12 +259,9 @@ from orca_spark.operators import analytics6  # noqa: F401
 from orca_spark.operators import pipeline4  # noqa: F401
 from orca_spark.operators import mixture3  # noqa: F401
 
-# r10: two registrations (r09 verdict item 8), so the prefix's other 48
-# slots retire the r03 cohort and start on r04: the incremental (IVM)
-# curation-manifest delta against frozen history artifacts, and the
-# streaming ingest -> gate -> exact-dedup TWS job.
+# r10: the incremental (IVM) curation-manifest delta against frozen
+# history artifacts.
 from orca_spark.operators import pipeline5  # noqa: F401
-from orca_spark.streaming import jobs12  # noqa: F401
 
 # r10 batch 2: oracled real-container roundtrips — the WAV and Y4M
 # decoders synthesize genuine containers from doc_id and the oracle
@@ -296,11 +276,12 @@ from orca_spark.operators import multimodal6  # noqa: F401
 # even banded ANN recall SQL-replicable).
 from orca_spark.operators import multimodal7  # noqa: F401
 
-# r11 batch 2: ingest → curation as one continuous contract — the
-# streaming twin of the incremental manifest, sharing pipeline5's
-# scorer/finalizer and its oracle verbatim (must import after pipeline5
-# so the oracle reuse sees the registered spec).
-from orca_spark.streaming import jobs13  # noqa: F401
+# Structured Streaming: the source and stateless queries (jobs), the
+# per-key state family (stateful) and the sinks and checkpointed ingest
+# (ingest). Imported after pipeline5, whose gate, scorer and oracle the
+# streaming curation twin reuses, so the non-streaming registration
+# order does not depend on what the streaming modules import.
+from orca_spark.streaming import jobs, stateful, ingest  # noqa: F401
 
 # r11 batch 3: the paper-exact ExactSubstr form (within-doc repeats +
 # keep-one canonical copy — closes the r10 advisor's parity note as a

@@ -797,6 +797,18 @@ def test_pair_scan_scoring_is_stage_split(spark):
                     )
 
 
+def test_semantic_vs_lexical_dedup_scans_pairs_once(spark):
+    """The O(n²) all-pairs candidate scan feeds the lexical annotation
+    through one join chain, so the final plan runs exactly one
+    nested-loop join (two when the candidates feed two branches)."""
+    df = _Q["semantic_vs_lexical_dedup"](spark, SF_DIR)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    loops = re.findall(r"BroadcastNestedLoopJoin|CartesianProduct", final)
+    assert len(loops) == 1, final
+
+
 def test_span_scrub_hashed_shuffles_only_on_longs(spark):
     """dedup_span_scrub_hashed exists to shuffle on xxhash64(gram)
     LONGS instead of gram strings (r10 verdict item 6): no exchange in

@@ -159,7 +159,7 @@ def test_tws_last_k_fold_trims_across_micro_batches():
     exercises the carry-over path; this does)."""
     import pandas as pd
 
-    from orca_spark.streaming.jobs10 import make_last_k_processor
+    from orca_spark.streaming.stateful import make_last_k_processor
 
     proc = make_last_k_processor()
     proc.init(_FakeHandle())
@@ -194,24 +194,28 @@ def test_tws_cents_round_half_away_from_zero_like_sql():
     review fix."""
     import pandas as pd
 
-    from orca_spark.streaming.jobs10 import cents_half_away, make_last_k_processor
-    from orca_spark.streaming.jobs11 import make_timer_flush_processor
+    from orca_spark.streaming.stateful import (
+        cents_half_away,
+        make_last_k_processor,
+        make_timer_flush_processor,
+    )
 
-    assert cents_half_away(0.125) == 13       # round() would give 12
-    assert cents_half_away(-0.125) == -13     # away from zero, not up
-    assert cents_half_away(0.124) == 12
+    def cents(v):
+        return int(cents_half_away([v])[0])
+
+    assert cents(0.125) == 13       # round() would give 12
+    assert cents(-0.125) == -13     # away from zero, not up
+    assert cents(0.124) == 12
     # duckdb-verified double-path cases: 2.675*100 is EXACTLY 267.5 in
     # binary (ties away -> 268), 1.005*100 is 100.49999999999999 (no
     # tie -> 100; floor(x+0.5)-style helpers can double-round here)
-    assert cents_half_away(2.675) == 268
-    assert cents_half_away(1.005) == 100
+    assert cents(2.675) == 268
+    assert cents(1.005) == 100
 
-    # the vectorized twin (jobs11's kernel path) must stay bit-identical
-    from orca_spark.streaming.jobs10 import cents_half_away_np
-
+    # one call over a whole column gives the same per-value answers
     probe = [0.125, -0.125, 0.124, 2.675, 1.005, -7.25, 0.0, 1e10, -1e10]
-    assert list(cents_half_away_np(probe)) == [
-        cents_half_away(v) for v in probe
+    assert list(cents_half_away(probe)) == [
+        13, -13, 12, 268, 100, -725, 0, 10**12, -(10**12)
     ]
 
     proc = make_last_k_processor()
@@ -240,7 +244,7 @@ def test_tws_cents_round_half_away_from_zero_like_sql():
 def test_tws_type_counts_fold_accumulates_across_micro_batches():
     import pandas as pd
 
-    from orca_spark.streaming.jobs10 import make_type_count_processor
+    from orca_spark.streaming.stateful import make_type_count_processor
 
     proc = make_type_count_processor()
     proc.init(_FakeHandle())
@@ -566,7 +570,7 @@ def test_tws_timer_flush_fold_without_transport():
     state carried across micro-batches."""
     import pandas as pd
 
-    from orca_spark.streaming.jobs11 import make_timer_flush_processor
+    from orca_spark.streaming.stateful import make_timer_flush_processor
 
     class _FakeValueState:
         def __init__(self):

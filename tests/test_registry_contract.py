@@ -267,7 +267,7 @@ def test_no_orphan_operator_modules():
     pkg_dir = os.path.dirname(os.path.abspath(orca_spark.__file__))
     candidates = (
         glob.glob(os.path.join(pkg_dir, "operators", "*.py"))
-        + glob.glob(os.path.join(pkg_dir, "streaming", "jobs*.py"))
+        + glob.glob(os.path.join(pkg_dir, "streaming", "*.py"))
         + glob.glob(os.path.join(pkg_dir, "sources", "*.py"))
     )
     registering = []

@@ -3,7 +3,7 @@ finalization under watermarks, and re-run determinism."""
 
 from pyspark.sql import functions as F
 
-from orca_spark.streaming.jobs import run_to_memory, stream_events
+from orca_spark.streaming.jobs import run_to_memory, stream_table
 from tests.conftest import SF_DIR
 
 
@@ -21,10 +21,10 @@ def test_append_mode_emits_only_finalized_windows(spark):
         )
 
     complete = {
-        (r.bucket, r.n) for r in run_to_memory(agg(stream_events(spark, SF_DIR)), "complete").collect()
+        (r.bucket, r.n) for r in run_to_memory(agg(stream_table(spark, SF_DIR, "events")), "complete").collect()
     }
     appended = {
-        (r.bucket, r.n) for r in run_to_memory(agg(stream_events(spark, SF_DIR)), "append").collect()
+        (r.bucket, r.n) for r in run_to_memory(agg(stream_table(spark, SF_DIR, "events")), "append").collect()
     }
     assert appended  # watermark passed for all but the trailing window(s)
     assert len(appended) < len(complete)
@@ -112,7 +112,7 @@ def test_incremental_ingest_second_run_reads_only_new_files(spark):
     from pyspark.sql import functions as F
 
     from orca_spark.operators.io_ops import scratch_path
-    from orca_spark.streaming.jobs4 import run_available_now
+    from orca_spark.streaming.ingest import ingest_in_passes
     from orca_spark.tables import load
     from tests.conftest import SF_DIR
 
@@ -124,14 +124,45 @@ def test_incremental_ingest_second_run_reads_only_new_files(spark):
     b = ev.where(F.col("event_id") % 2 == 1)
     n_a, n_b = a.count(), b.count()
 
-    a.write.parquet(in_dir)
-    schema = spark.read.parquet(in_dir).schema
-    assert run_available_now(spark, in_dir, schema, out_dir, ckpt) == n_a
-    b.write.mode("append").parquet(in_dir)
-    assert run_available_now(spark, in_dir, schema, out_dir, ckpt) == n_b
-    # a third run with nothing new processes nothing
-    assert run_available_now(spark, in_dir, schema, out_dir, ckpt) == 0
+    def sink(w):
+        return w.format("parquet").option("path", out_dir).outputMode("append")
+
+    # a third pass lands no new rows and must process nothing
+    rows = ingest_in_passes(spark, [a, b, a.limit(0)], in_dir, ckpt, sink)
+    assert rows[0] == n_a
+    assert rows[1] == n_b
+    assert rows[2] == 0
     assert spark.read.parquet(out_dir).count() == n_a + n_b
+
+
+def test_ingest_in_passes_streams_the_written_schema(spark):
+    """The pass-ingest helper takes its stream schema from the frame it
+    wrote instead of running an inference job over the landed files;
+    the two must agree, or the stream would read the files with a
+    schema Spark itself would not infer."""
+    import shutil
+
+    from orca_spark.operators.io_ops import scratch_path
+    from orca_spark.streaming.ingest import ingest_in_passes
+    from orca_spark.tables import load
+
+    base = scratch_path("ingest_schema_test", SF_DIR)
+    shutil.rmtree(base, ignore_errors=True)
+    in_dir, ckpt = f"{base}/in", f"{base}/ckpt"
+    seen = []
+
+    def consume(batch_df, _epoch):
+        seen.append(batch_df.schema)
+        batch_df.write.format("noop").mode("overwrite").save()
+
+    def sink(w):
+        return w.foreachBatch(consume)
+
+    ev = load(spark, SF_DIR, "events")
+    assert ingest_in_passes(spark, [ev], in_dir, ckpt, sink) == [ev.count()]
+    assert seen, "the pass ran no micro-batch"
+    want = spark.read.parquet(in_dir).schema
+    assert all(s == want for s in seen), (seen, want)
 
 
 def test_tws_gated_or_matching_oracle(spark, duck):
@@ -141,7 +172,7 @@ def test_tws_gated_or_matching_oracle(spark, duck):
     import pytest as _pytest
 
     from orca_spark.registry import REGISTRY
-    from orca_spark.streaming.jobs5 import tws_available
+    from orca_spark.streaming.stateful import tws_available
 
     if not tws_available():
         assert "streaming_tws_user_running_max" not in REGISTRY
@@ -162,7 +193,7 @@ def test_tws_processor_logic_without_transport(spark):
     operator itself is protobuf-gated."""
     import pandas as pd
 
-    from orca_spark.streaming.jobs5 import make_running_max
+    from orca_spark.streaming.stateful import make_running_max
     from orca_spark.tables import load
 
     class FakeValueState:

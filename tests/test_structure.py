@@ -7,7 +7,11 @@
   session-global temp views;
 * the driver-loop width policy lives in ``session.loop_width``;
 * a frame is built from driver-side rows only by ``io.rows_to_df``
-  (Arrow record batches, no Python worker).
+  (Arrow record batches, no Python worker);
+* streaming modules are named by domain, not by round;
+* a table's schema comes from its footer or from the frame that wrote
+  it, never from a ``read.parquet(...).schema`` inference job;
+* a corpus table becomes a stream only through ``streaming.jobs.stream_table``.
 """
 
 import ast
@@ -71,3 +75,50 @@ def test_loop_width_policy_has_one_copy():
 def test_local_frames_are_built_only_in_io():
     hits = [h for h in _hits(r"createDataFrame\(") if not h.startswith("orca_spark/io.py:")]
     assert not hits, f"build frames from driver-side rows with io.rows_to_df: {hits}"
+
+
+def test_streaming_modules_are_not_round_numbered():
+    numbered = sorted(
+        p.name for p in (_PKG / "streaming").glob("*.py") if p.stem[-1].isdigit()
+    )
+    assert not numbered, f"name streaming modules by domain: {numbered}"
+
+
+def test_no_schema_inference_reads():
+    rx = re.compile(r"read\s*\.\s*parquet\([^()]*\)\s*\.\s*schema\b")
+    hits = [
+        f"{p.relative_to(_PKG.parent)}:{src.count(chr(10), 0, m.start()) + 1}"
+        for p, src in _SOURCES.items()
+        for m in rx.finditer(src)
+    ]
+    assert not hits, (
+        f"take the schema from tables.parquet_schema or the written frame: {hits}"
+    )
+
+
+def test_corpus_tables_stream_only_through_stream_table():
+    """A ``readStream`` statement that names ``sf_dir`` reads a corpus
+    table; the only one allowed is inside ``stream_table``."""
+    hits = []
+    for p, src in _SOURCES.items():
+        lines = src.splitlines()
+        for node in ast.walk(ast.parse(src)):
+            if not isinstance(node, (ast.Assign, ast.AnnAssign, ast.Return, ast.Expr)):
+                continue
+            text = "\n".join(lines[node.lineno - 1 : node.end_lineno])
+            if "readStream" in text and "sf_dir" in text:
+                hits.append((p, node.lineno))
+    jobs = _PKG / "streaming" / "jobs.py"
+    inside = next(
+        range(n.lineno, n.end_lineno + 1)
+        for n in ast.walk(ast.parse(_SOURCES[jobs]))
+        if isinstance(n, ast.FunctionDef) and n.name == "stream_table"
+    )
+    outside = [
+        f"{p.relative_to(_PKG.parent)}:{line}"
+        for p, line in hits
+        if not (p == jobs and line in inside)
+    ]
+    assert hits and not outside, (
+        f"stream corpus tables with streaming.jobs.stream_table: {outside or 'none found'}"
+    )
