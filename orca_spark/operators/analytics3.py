@@ -1,38 +1,24 @@
-"""Operational health: return rates and SLO burn rate.
+"""Operational health: monthly return rates.
 
-* ``lineitem_return_rates`` — monthly return-flag share per ship
-  month: the merchandising health series (a rising 'R' share is the
-  earliest quality regression signal in order data), reported with
-  line counts so small months can't masquerade as trends.
-* ``events_slo_burn_rate`` — the SRE burn-rate diagnostic over the
-  events stream: per hour, the error share in the trailing 1-hour vs
-  trailing 6-hour window, and their ratio (burn > 1 means the error
-  budget is being consumed faster RIGHT NOW than the recent baseline
-  — the standard page-on-fast-burn signal). Computed on the dense
-  zero-filled hour spine so silent hours read as zero traffic, not as
-  missing rows.
+``lineitem_return_rates`` — monthly return-flag share per ship month:
+the merchandising health series (a rising 'R' share is the earliest
+quality regression signal in order data), reported with line counts so
+small months can't masquerade as trends.
 
-Determinism: both are BIGINT count arithmetic end to end; shares and
-the burn ratio divide exact integers (identical doubles both
-engines) and round at the surface, with NULL where a window carries
-no traffic.
+Determinism: BIGINT count arithmetic end to end; the share divides
+exact integers (identical doubles both engines) and rounds at the
+surface.
 
-Scale: return rates are one map-side-combinable aggregation to
-month cardinality. The burn series aggregates the stream to the
-hour spine first; the trailing windows are ordered growing/rows
-frames over the time-length-sized series (never the corpus), the
-same shape as the ACF module.
+Scale: one map-side-combinable aggregation to month cardinality.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from orca_spark.registry import register
 from orca_spark.tables import load
-
-_LONG_H = 6  # long burn window (hours)
 
 
 @register(
@@ -69,94 +55,4 @@ def lineitem_return_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
         n.alias("n_lines"),
         ret.cast("long").alias("n_returned"),
         F.round(ret * F.lit(100.0) / n, 4).alias("return_pct"),
-    )
-
-
-@register(
-    "events_slo_burn_rate",
-    oracle=f"""
-        WITH counts AS (
-            SELECT CAST(floor(epoch(date_trunc('hour', ts)) / 3600)
-                        AS BIGINT) AS h,
-                   CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS e
-            FROM events
-            WHERE ts IS NOT NULL
-              AND ts >= TIMESTAMP '1970-01-01'
-              AND ts < TIMESTAMP '2100-01-01'
-            GROUP BY 1
-        ),
-        spine AS (
-            SELECT unnest(generate_series((SELECT min(h) FROM counts),
-                                          (SELECT max(h) FROM counts))) AS h
-        ),
-        series AS MATERIALIZED (
-            SELECT s.h, COALESCE(c.n, 0) AS n, COALESCE(c.e, 0) AS e
-            FROM spine s LEFT JOIN counts c USING (h)
-        ),
-        win AS (
-            SELECT h, n, e,
-                   CAST(sum(n) OVER w AS BIGINT) AS n6,
-                   CAST(sum(e) OVER w AS BIGINT) AS e6
-            FROM series
-            WINDOW w AS (ORDER BY h
-                         ROWS BETWEEN {_LONG_H - 1} PRECEDING
-                                  AND CURRENT ROW)
-        )
-        SELECT h,
-               round(e * 100.0 / nullif(n, 0), 4) AS err_pct_1h,
-               round(e6 * 100.0 / nullif(n6, 0), 4) AS err_pct_6h,
-               round((e * 1.0 / nullif(n, 0))
-                     / nullif(e6 * 1.0 / nullif(n6, 0), 0), 4) AS burn
-        FROM win
-    """,
-    description=f"SRE burn rate over the dense hour spine: the current "
-    f"hour's error share vs the trailing {_LONG_H}-hour baseline and "
-    "their ratio (burn > 1 = error budget consumed faster than the "
-    "recent norm — the page-on-fast-burn signal); silent hours are "
-    "zero traffic with NULL rates, all counts BIGINT with exact-ratio "
-    "surfaces rounded, trailing windows are growing rows-frames over "
-    "the time-length-sized series",
-)
-def events_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events").where(
-        F.col("ts").isNotNull()
-        & (F.col("ts") >= F.lit("1970-01-01").cast("timestamp"))
-        & (F.col("ts") < F.lit("2100-01-01").cast("timestamp"))
-    )
-    counts = ev.select(
-        (F.unix_timestamp(F.date_trunc("hour", "ts")) / F.lit(3600))
-        .cast("long")
-        .alias("h"),
-        F.when(F.col("event_type") == "error", 1).otherwise(0).alias("is_e"),
-    ).groupBy("h").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("is_e").cast("long").alias("e")
-    )
-    span = counts.agg(F.min("h").alias("lo"), F.max("h").alias("hi"))
-    spine = span.select(F.explode(F.sequence("lo", "hi")).alias("h"))
-    series = spine.join(counts, "h", "left").select(
-        "h",
-        F.coalesce("n", F.lit(0).cast("long")).alias("n"),
-        F.coalesce("e", F.lit(0).cast("long")).alias("e"),
-    )
-    w = W.orderBy("h").rowsBetween(-(_LONG_H - 1), W.currentRow)
-    win = series.select(
-        "h",
-        "n",
-        "e",
-        F.sum("n").over(w).alias("n6"),
-        F.sum("e").over(w).alias("e6"),
-    )
-    rate1 = F.col("e") * F.lit(1.0) / F.nullif(F.col("n"), F.lit(0))
-    rate6 = F.col("e6") * F.lit(1.0) / F.nullif(F.col("n6"), F.lit(0))
-    return win.select(
-        "h",
-        F.round(F.col("e") * F.lit(100.0) / F.nullif(F.col("n"), F.lit(0)), 4).alias(
-            "err_pct_1h"
-        ),
-        F.round(
-            F.col("e6") * F.lit(100.0) / F.nullif(F.col("n6"), F.lit(0)), 4
-        ).alias("err_pct_6h"),
-        F.round(rate1 / F.nullif(rate6, F.lit(0.0)), 4).alias("burn"),
     )

@@ -100,8 +100,9 @@ def ivm_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free, and avg is derived from the exact partials at publish
     time."""
     li = load(spark, sf_dir, "lineitem")
-    # coalesce + pmod (the jobs4 lesson): the halves must PARTITION the
-    # table — a NULL or negative orderkey must land in exactly one
+    # coalesce + pmod (as in streaming.ingest._halves): the halves must
+    # PARTITION the table — a NULL or negative orderkey must land in
+    # exactly one half
     half = F.coalesce(F.pmod("l_orderkey", F.lit(2)), F.lit(0))
     base = _partial_state(li.where(half == 0))
     delta = _partial_state(li.where(half == 1))

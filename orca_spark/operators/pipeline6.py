@@ -122,8 +122,9 @@ def pipeline_multimodal_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     key self-join (never all-pairs) whose drop set anti-joins back on
     doc_id; the manifest is three map-side-combinable aggregates on
     (lang, source). Each dedup stage's ingest-once/probe-delta twin is
-    already registered (jobs12 exact state store, multimodal7 phash
-    index) — this is the batch composition those indexes serve."""
+    already registered (streaming.stateful exact state store,
+    multimodal7 phash index) — this is the batch composition those
+    indexes serve."""
     kept = gated_docs(spark, sf_dir).localCheckpoint(eager=False)
     surv1 = kept.groupBy(F.xxhash64("text").alias("h")).agg(
         F.min("doc_id").alias("doc_id")

@@ -619,3 +619,157 @@ def case_when_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.groupBy(band.alias("price_band"), F.col("o_orderstatus"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
+
+
+# ---------------------------------------------------------------------------
+# revenue shares and series: ABC/Pareto classes, seasonal decomposition
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "orders_pareto_classes",
+    oracle="""
+        WITH rev AS (
+            SELECT o_custkey,
+                   sum(CAST(o_totalprice AS DECIMAL(18,4))) AS revenue
+            FROM orders GROUP BY o_custkey
+        ),
+        ranked AS (
+            SELECT o_custkey, revenue,
+                   round(CAST(sum(revenue) OVER (
+                             ORDER BY revenue DESC, o_custkey
+                             ROWS BETWEEN UNBOUNDED PRECEDING
+                                      AND CURRENT ROW
+                         ) AS DOUBLE)
+                         / CAST(sum(revenue) OVER () AS DOUBLE),
+                         4) AS cum_share
+            FROM rev
+        )
+        SELECT o_custkey, CAST(round(revenue, 2) AS DOUBLE) AS revenue,
+               cum_share,
+               CASE WHEN cum_share <= 0.80 THEN 'A'
+                    WHEN cum_share <= 0.95 THEN 'B'
+                    ELSE 'C' END AS abc_class
+        FROM ranked
+    """,
+    description="ABC/Pareto revenue classes: decimal-exact per-customer "
+    "revenue, global cumulative-share window (revenue-desc with key "
+    "tiebreak), banded into A (<=80%), B (<=95%), C",
+)
+def orders_pareto_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scale: the per-customer aggregate partial-aggregates map-side;
+    the cumulative window is a GLOBAL sort over the aggregated (one row
+    per customer) frame — the documented single-partition pinch point,
+    same trade-off as any exact cumulative share. When customers
+    outgrow one partition, the scalable form is the two-pass
+    window_distribution_scalable pattern (per-partition partials +
+    broadcast offsets) already in this engine; the classification
+    logic is unchanged.
+
+    Determinism: revenue accumulates in DECIMAL(18,4) (the relational7
+    money pattern) — double sums differ from the oracle by summation
+    order, and here an ulp flip would also REORDER near-equal customers
+    under the revenue-desc window, cascading into every later
+    cum_share. Exact decimals make the sort order and the cumulative
+    sums bit-identical on both engines; the single decimal→double
+    division then rounds identically, so the band CASE sees the same
+    number."""
+    rev = (
+        load(spark, sf_dir, "orders")
+        .groupBy("o_custkey")
+        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,4)")).alias("revenue"))
+    )
+    cum = W.orderBy(F.col("revenue").desc(), "o_custkey").rowsBetween(
+        W.unboundedPreceding, W.currentRow
+    )
+    whole = W.partitionBy()
+    ranked = rev.withColumn(
+        "cum_share",
+        F.round(
+            F.sum("revenue").over(cum).cast("double")
+            / F.sum("revenue").over(whole).cast("double"),
+            4,
+        ),
+    )
+    return ranked.select(
+        "o_custkey",
+        F.round("revenue", 2).cast("double").alias("revenue"),
+        "cum_share",
+        F.when(F.col("cum_share") <= 0.80, "A")
+        .when(F.col("cum_share") <= 0.95, "B")
+        .otherwise("C")
+        .alias("abc_class"),
+    )
+
+
+_MA = 12  # centered moving-average width (months)
+
+
+@register(
+    "orders_seasonal_decomposition",
+    oracle=f"""
+        WITH monthly AS (
+            SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate)
+                        AS BIGINT) AS ym,
+                   CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
+                        AS BIGINT) AS cents
+            FROM orders
+            WHERE o_orderdate IS NOT NULL AND o_totalprice IS NOT NULL
+            GROUP BY 1
+        ),
+        win AS (
+            SELECT ym, cents,
+                   CAST(sum(cents) OVER w AS BIGINT) AS wsum,
+                   CAST(count(*) OVER w AS BIGINT) AS wn
+            FROM monthly
+            WINDOW w AS (ORDER BY ym
+                         ROWS BETWEEN {_MA // 2 - 1} PRECEDING
+                                  AND {_MA // 2} FOLLOWING)
+        )
+        SELECT ym,
+               CAST(round(cents / 100.0, 2) AS DOUBLE) AS revenue,
+               CASE WHEN wn = {_MA}
+                    THEN round(wsum / 100.0 / {_MA}, 4) END AS trend,
+               CASE WHEN wn = {_MA}
+                    THEN round(cents * {_MA} * 1.0 / wsum, 4) END
+                   AS seasonal_ratio
+        FROM win
+    """,
+    description=f"classical seasonal decomposition of monthly revenue: "
+    f"centered {_MA}-month moving-average trend (NULL where the window "
+    "is incomplete, never a silently-shortened average) and the "
+    "month/trend seasonal ratio — the demand-planning baseline; "
+    "revenue rides as BIGINT cents so every surfaced value derives "
+    "from exact integers, ratios rounded at the surface; one "
+    "aggregation to |months| rows, then a model-sized ordered window",
+)
+def orders_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = load(spark, sf_dir, "orders").where(
+        F.col("o_orderdate").isNotNull() & F.col("o_totalprice").isNotNull()
+    )
+    monthly = o.groupBy(
+        (F.year("o_orderdate") * 100 + F.month("o_orderdate"))
+        .cast("long")
+        .alias("ym")
+    ).agg(
+        F.sum(
+            F.round(F.col("o_totalprice") * 100, 0).cast("long")
+        ).alias("cents")
+    )
+    w = W.orderBy("ym").rowsBetween(-(_MA // 2 - 1), _MA // 2)
+    win = monthly.select(
+        "ym",
+        "cents",
+        F.sum("cents").over(w).alias("wsum"),
+        F.count(F.lit(1)).over(w).alias("wn"),
+    )
+    full = F.col("wn") == _MA
+    return win.select(
+        "ym",
+        F.round(F.col("cents") / F.lit(100.0), 2).cast("double").alias("revenue"),
+        F.when(full, F.round(F.col("wsum") / 100.0 / _MA, 4)).alias("trend"),
+        F.when(
+            full,
+            F.round(F.col("cents") * _MA * F.lit(1.0) / F.col("wsum"), 4),
+        ).alias("seasonal_ratio"),
+    )

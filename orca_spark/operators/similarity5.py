@@ -239,7 +239,8 @@ _SRP_KEY_SQL = (
     """,
     description="incremental embedding near-dup against a PERSISTED "
     "SQ8+SRP index — the ingest-once/probe-delta shape for the one "
-    "family that lacked it (exact: jobs12, minhash: dedup3, phash: "
+    "family that lacked it (exact: streaming.stateful, minhash: "
+    "dedup3, phash: "
     "multimodal7): history vectors (even ids) write 16-bit sign-band "
     "keys + int8 codes to parquet ONCE; the new batch (odd ids + "
     "re-ingested %10 vectors, so re-submitted content is guaranteed "

@@ -10,7 +10,7 @@ each with a value-level DuckDB oracle like every other query:
   a declared struct); this is the path for property bags whose keys
   drift. Malformed documents parse to NULL under the ``try_`` variant
   and flow through as missing, never aborting the scan — the contract
-  a 100 TB ingest needs. (events2.py's ``events_props_typed`` is the
+  a 100 TB ingest needs. (relational7.py's ``events_props_typed`` is the
   declared-schema ``from_json`` sibling; both belong in the surface.)
 * ``orders_lateral_topk_lines`` — ``DataFrame.lateralJoin``: the
   correlated per-row subquery (top-2 highest-price lineitems PER

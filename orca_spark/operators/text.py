@@ -145,3 +145,77 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.md5(F.encode(normalized, "UTF-8")).alias("fingerprint"),
     )
+
+
+_VOWELS = "[aeiouAEIOU]+"
+_SENT = "[.!?]+"
+
+
+@register(
+    "text_readability_proxy",
+    oracle=f"""
+        WITH per_doc AS (
+            SELECT lang,
+                   len(list_filter(string_split(text, ' '),
+                                   t -> t <> '')) AS w,
+                   len(regexp_extract_all(text, '{_SENT}')) AS s,
+                   len(regexp_extract_all(text, '{_VOWELS}')) AS vg
+            FROM documents
+            WHERE text IS NOT NULL AND lang IS NOT NULL
+        ),
+        agg AS (
+            SELECT lang,
+                   CAST(count(*) AS BIGINT) AS n_docs,
+                   CAST(sum(w) AS BIGINT) AS words,
+                   CAST(sum(s) AS BIGINT) AS sentences,
+                   CAST(sum(vg) AS BIGINT) AS vowel_groups
+            FROM per_doc GROUP BY lang
+        )
+        SELECT lang, n_docs, words, sentences, vowel_groups,
+               round(206.835
+                     - 1.015 * (words * 1.0 / nullif(sentences, 0))
+                     - 84.6 * (vowel_groups * 1.0 / nullif(words, 0)),
+                     4) AS flesch_proxy
+        FROM agg
+    """,
+    description="per-language Flesch-style reading-ease proxy: words "
+    "per sentence and vowel-group runs per word (the syllable "
+    "stand-in) through the standard 206.835 formula — a deterministic "
+    "ranking signal separating prose from listings/run-ons, not a "
+    "true-syllable measurement; all counts are BIGINT regex counts, "
+    "the formula applies to exact-integer ratios, rounded at the "
+    "surface",
+)
+def text_readability_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load(spark, sf_dir, "documents").where(
+        F.col("text").isNotNull() & F.col("lang").isNotNull()
+    )
+    per_doc = docs.select(
+        "lang",
+        F.size(
+            F.filter(F.split("text", " "), lambda t: t != F.lit(""))
+        ).alias("w"),
+        F.regexp_count("text", F.lit(_SENT)).alias("s"),
+        F.regexp_count("text", F.lit(_VOWELS)).alias("vg"),
+    )
+    agg = per_doc.groupBy("lang").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("w").cast("long").alias("words"),
+        F.sum("s").cast("long").alias("sentences"),
+        F.sum("vg").cast("long").alias("vowel_groups"),
+    )
+    return agg.select(
+        "lang",
+        "n_docs",
+        "words",
+        "sentences",
+        "vowel_groups",
+        F.round(
+            F.lit(206.835)
+            - F.lit(1.015)
+            * (F.col("words") / F.nullif(F.col("sentences"), F.lit(0)))
+            - F.lit(84.6)
+            * (F.col("vowel_groups") / F.nullif(F.col("words"), F.lit(0))),
+            4,
+        ).alias("flesch_proxy"),
+    )

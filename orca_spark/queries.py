@@ -30,7 +30,6 @@ from orca_spark.operators import (  # noqa: F401
     clustering,
     sampling,
     text7,
-    timeseries,
     similarity3,
 )
 
@@ -52,7 +51,6 @@ from orca_spark.operators import (  # noqa: F401
     schema_ops,
     audit,
     linkage,
-    events2,
     text8,
     langid,
     sketches,
@@ -65,7 +63,6 @@ from orca_spark.operators import (  # noqa: F401
     dedup,
     dedup2,
     text5,
-    events,
     ranges,
     relational4,
     text4,
@@ -84,15 +81,19 @@ from orca_spark.operators import (  # noqa: F401
     profile,
 )
 
+# The events family: windows, sessions and value distributions
+# (events), sequences and user behaviour (event_behavior), and the
+# dense hour series with every query over it (event_series).
+from orca_spark.operators import events, event_behavior, event_series  # noqa: F401
+
 # r05 batch 3: LM scoring / collocations, BPE merge training, near-dup
-# graph analytics, truncated EWMA. Verification slots are scheduled by
+# graph analytics. Verification slots are scheduled by
 # __spark_entry__.verification_order (never-green first), not by this
 # import's position.
 from orca_spark.operators import (  # noqa: F401
     text9,
     bpe,
     graph,
-    timeseries2,
 )
 
 # r05 batch 4: phrase search, categorical association, weighted
@@ -104,11 +105,8 @@ from orca_spark.operators import (  # noqa: F401
     embeddings2,
 )
 
-# r05 batch 5: sequence mining, rolling reach, robust dispersion, RFM.
-from orca_spark.operators import (  # noqa: F401
-    events3,
-    relational8,
-)
+# r05 batch 5: RFM.
+from orca_spark.operators import relational8  # noqa: F401
 
 # r05 batch 6: the composed corpus pipeline.
 from orca_spark.operators import pipeline  # noqa: F401
@@ -132,15 +130,15 @@ from orca_spark.operators import bpe2, mixture  # noqa: F401
 from orca_spark.operators import paths, privacy, stats3  # noqa: F401
 
 # r07 batch 2: training-input layout (sequence packing + context
-# chunking), integer-exact burst detection, triangle census.
-from orca_spark.operators import packing, events4, graph2  # noqa: F401
+# chunking), triangle census.
+from orca_spark.operators import packing, graph2  # noqa: F401
 
 # r07 batch 3: count-preserving dedup, source KL drift, embedding
 # outliers.
 from orca_spark.operators import dedup4, text12, embeddings4  # noqa: F401
 
-# r07 batch 4: l-diversity audit, ordered funnel, Zipf fit.
-from orca_spark.operators import privacy2, events5, text13  # noqa: F401
+# r07 batch 4: l-diversity audit, Zipf fit.
+from orca_spark.operators import privacy2, text13  # noqa: F401
 
 # r07 batch 5: Matryoshka truncation fidelity, cross-source n-gram
 # novelty, real resize kernel on the multimodal Arrow path, language-ID
@@ -159,11 +157,10 @@ from orca_spark.sources import jsonl  # noqa: F401
 # coefficient, fixed-round k-core, common-neighbor link prediction).
 from orca_spark.operators import graph3  # noqa: F401
 
-# r07 batch 9: time-series diagnostics (hourly ACF, weekly seasonality
-# index, user lifecycle), corpus-health lexical stats (hapax/TTR,
-# source JSD, per-source dup rate, sentence shapes), and the
-# adjacent-pair cosine histogram over embeddings.
-from orca_spark.operators import embeddings6, events6, text16  # noqa: F401
+# r07 batch 9: corpus-health lexical stats (hapax/TTR, source JSD,
+# per-source dup rate, sentence shapes), and the adjacent-pair cosine
+# histogram over embeddings.
+from orca_spark.operators import embeddings6, text16  # noqa: F401
 
 # r07 batch 10: business-calendar analytics (YoY growth, SLA breach),
 # budget-constrained curation manifest, and the Python-DataSource
@@ -175,27 +172,19 @@ from orca_spark.operators import packing2, relational10  # noqa: F401
 from orca_spark.operators import privacy3, text17  # noqa: F401
 
 # r07 batch 12: structured-data fuzzy dup detection (double-charge
-# pairs) and rule-based bot scoring.
-from orca_spark.operators import events7, relational11  # noqa: F401
-
-# r07 batch 13: linear multi-touch attribution and the Flesch-style
-# readability proxy.
-from orca_spark.operators import events8  # noqa: F401
+# pairs).
+from orca_spark.operators import relational11  # noqa: F401
 
 # r07 batch 14: Spark-4 engine surfaces — VARIANT property bags,
 # DataFrame.lateralJoin, and the pure-SQL (spark.sql) entry.
 from orca_spark.operators import spark4  # noqa: F401
 
-# r07 batch 15: classical seasonal decomposition and the cross-series
-# hourly correlation map.
-from orca_spark.operators import timeseries3  # noqa: F401
-
 # r07 batch 16: the mapInArrow zero-copy digest path.
 from orca_spark.operators import multimodal3  # noqa: F401
 
-# r07 batch 17: built-in batch session_window, join-strategy hints,
-# and the try_* ANSI-safe arithmetic surface.
-from orca_spark.operators import events9, relational12  # noqa: F401
+# r07 batch 17: join-strategy hints and the try_* ANSI-safe arithmetic
+# surface.
+from orca_spark.operators import relational12  # noqa: F401
 
 # r07 batch 18: supplier-concentration HHI and the composed per-source
 # dedup funnel (raw -> exact survivors -> near-dup survivors).
@@ -205,11 +194,10 @@ from orca_spark.operators import analytics2  # noqa: F401
 # and the code-vs-prose router.
 from orca_spark.operators import stats4  # noqa: F401
 
-# r07 batch 20: growth accounting (new vs returning), hourly gap
-# interpolation, and boilerplate-strip accounting.
-from orca_spark.operators import events10, text18  # noqa: F401
+# r07 batch 20: boilerplate-strip accounting.
+from orca_spark.operators import text18  # noqa: F401
 
-# r07 batch 21: monthly return-rate series and the SRE SLO burn rate.
+# r07 batch 21: monthly return-rate series.
 from orca_spark.operators import analytics3  # noqa: F401
 
 # r07 batch 22: month-over-month priority-mix drift (TV distance) and
@@ -220,10 +208,10 @@ from orca_spark.operators import analytics4  # noqa: F401
 # embed-join -> per-language budget pack), r07 verdict item 8.
 from orca_spark.operators import pipeline3  # noqa: F401
 
-# r08 batch 3: CUSUM change-point localization, the published Gopher
-# quality-rule scorecard + zlib compression-ratio signal, and the
-# per-dimension embedding distribution monitor.
-from orca_spark.operators import embeddings7, events11, text19  # noqa: F401
+# r08 batch 3: the published Gopher quality-rule scorecard + zlib
+# compression-ratio signal, and the per-dimension embedding
+# distribution monitor.
+from orca_spark.operators import embeddings7, text19  # noqa: F401
 
 # r08 batch 4: WITH RECURSIVE (Spark 4 recursive CTE), interval x
 # interval overlap join, the running-COUNT(DISTINCT) rewrite, and
@@ -233,9 +221,6 @@ from orca_spark.operators import mixture2, recursive, relational13  # noqa: F401
 # r08 batch 5: null-safe joins + named-parameter SQL, the Benford
 # fabricated-amounts screen, and DCT perceptual-hash image near-dup.
 from orca_spark.operators import analytics5, multimodal4, relational14  # noqa: F401
-
-# r08 batch 6: dynamic-gap session windows (per-event timeouts).
-from orca_spark.operators import events12  # noqa: F401
 
 # r08 batch 8: paper-backed curation trio — DSIR importance weights,
 # CCNet perplexity terciles, inverted-index postings summary.

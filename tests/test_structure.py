@@ -11,7 +11,11 @@
 * streaming modules are named by domain, not by round;
 * a table's schema comes from its footer or from the frame that wrote
   it, never from a ``read.parquet(...).schema`` inference job;
-* a corpus table becomes a stream only through ``streaming.jobs.stream_table``.
+* a corpus table becomes a stream only through ``streaming.jobs.stream_table``;
+* events and time-series modules are named by domain, not by round;
+* the dense hour spine and its [1970, 2100) event-time window live only
+  in ``event_series.hourly_series``, and the per-user bucket grid has
+  one copy.
 """
 
 import ast
@@ -32,21 +36,25 @@ def _hits(pattern: str) -> list[str]:
     ]
 
 
-def test_available_now_trigger_only_in_drain():
-    hits = _hits(r"availableNow\s*=\s*True")
-    jobs = _PKG / "streaming" / "jobs.py"
-    drain = next(
+def _lines_of(path: pathlib.Path, name: str) -> range:
+    """Line numbers of the top-level function ``name`` in ``path``."""
+    fn = next(
         (
             n
-            for n in ast.walk(ast.parse(_SOURCES[jobs]))
-            if isinstance(n, ast.FunctionDef) and n.name == "drain"
+            for n in ast.walk(ast.parse(_SOURCES.get(path, "")))
+            if isinstance(n, ast.FunctionDef) and n.name == name
         ),
         None,
     )
-    assert drain is not None, "streaming/jobs.py has no drain()"
+    assert fn is not None, f"{path.relative_to(_PKG.parent)} has no {name}()"
+    return range(fn.lineno, fn.end_lineno + 1)
+
+
+def test_available_now_trigger_only_in_drain():
+    hits = _hits(r"availableNow\s*=\s*True")
     inside = [
         f"orca_spark/streaming/jobs.py:{i}"
-        for i in range(drain.lineno, drain.end_lineno + 1)
+        for i in _lines_of(_PKG / "streaming" / "jobs.py", "drain")
     ]
     assert len(hits) == 1 and hits[0] in inside, (
         f"run bounded streams through streaming.jobs.drain: {hits}"
@@ -109,11 +117,7 @@ def test_corpus_tables_stream_only_through_stream_table():
             if "readStream" in text and "sf_dir" in text:
                 hits.append((p, node.lineno))
     jobs = _PKG / "streaming" / "jobs.py"
-    inside = next(
-        range(n.lineno, n.end_lineno + 1)
-        for n in ast.walk(ast.parse(_SOURCES[jobs]))
-        if isinstance(n, ast.FunctionDef) and n.name == "stream_table"
-    )
+    inside = _lines_of(jobs, "stream_table")
     outside = [
         f"{p.relative_to(_PKG.parent)}:{line}"
         for p, line in hits
@@ -122,3 +126,38 @@ def test_corpus_tables_stream_only_through_stream_table():
     assert hits and not outside, (
         f"stream corpus tables with streaming.jobs.stream_table: {outside or 'none found'}"
     )
+
+
+def test_events_modules_are_not_round_numbered():
+    numbered = sorted(
+        p.name
+        for p in (_PKG / "operators").glob("*.py")
+        if re.fullmatch(r"events\d+\.py|timeseries.*\.py", p.name)
+    )
+    assert not numbered, (
+        f"fold these into events, event_behavior or event_series: {numbered}"
+    )
+
+
+def test_event_time_window_has_one_copy():
+    hits = _hits(r'F\.lit\("2100-01-01"\)')
+    assert len(hits) == 1, (
+        f"filter event times through event_series.hourly_series: {hits}"
+    )
+
+
+def test_hour_spine_only_in_hourly_series():
+    hits = _hits(r'F\.sequence\("lo",\s*"hi"\)')
+    inside = [
+        f"orca_spark/operators/event_series.py:{i}"
+        for i in _lines_of(_PKG / "operators" / "event_series.py", "hourly_series")
+    ]
+    outside = [h for h in hits if h not in inside]
+    assert hits and not outside, (
+        f"build hour series with event_series.hourly_series: {outside or 'none found'}"
+    )
+
+
+def test_per_user_grid_has_one_copy():
+    hits = _hits(r'F\.sequence\("lo",\s*"hi",')
+    assert len(hits) == 1, f"build per-user grids with event_series._user_grid: {hits}"

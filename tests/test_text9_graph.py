@@ -189,7 +189,7 @@ def test_ewma_constant_series_is_constant(spark, tmp_path):
     sf = tmp_path / "sf"
     sf.mkdir()
     rows.to_parquet(sf / "events.parquet")
-    from orca_spark.operators.timeseries2 import events_ewma_smoothed
+    from orca_spark.operators.event_series import events_ewma_smoothed
 
     out = events_ewma_smoothed(spark, str(sf))
     vals = [r.ewma for r in out.collect()]
