@@ -2,18 +2,17 @@
 
 import datetime
 
+from pyspark.sql import functions as F
+
 from orca_spark.io import rows_to_df
 from orca_spark.operators.event_series import hourly_series
-from pyspark.sql import functions as F
 
 
 def _events(spark):
-    day = datetime.datetime(2024, 1, 1)
-    at = lambda h, m=0: day + datetime.timedelta(hours=h, minutes=m)  # noqa: E731
     rows = [
-        ("a", at(10, 5)),
-        ("a", at(10, 40)),
-        ("b", at(13, 20)),
+        ("a", datetime.datetime(2024, 1, 1, 10, 5)),
+        ("a", datetime.datetime(2024, 1, 1, 10, 40)),
+        ("b", datetime.datetime(2024, 1, 1, 13, 20)),
         # garbage event times: none of them may reach the spine
         ("a", None),
         ("b", datetime.datetime(1969, 12, 31, 23)),
