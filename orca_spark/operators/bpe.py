@@ -8,14 +8,16 @@ the way a 100 TB corpus forces it to be:
    rows), never the corpus again. This is the standard trainer shape:
    corpus size pays once, merge count pays |V| per step.
 2. Each merge step: explode adjacent symbol pairs weighted by word
-   frequency (JVM-side `transform`/`explode`, map-side partial agg),
+   frequency (JVM-side `transform`/`inline`, map-side partial agg),
    pick the argmax pair — a ONE-ROW driver collect, the iterative
    scalar every trainer needs — and rewrite the symbol arrays with a
    left-to-right non-overlapping merge (JVM-side mark-and-``replace``:
    each symbol maps to one mask char, and one scan-forward ``replace``
    of the pair pattern IS the greedy pairing — linear within a word,
    embarrassingly parallel ACROSS the vocabulary, and never crossing
-   the Python boundary).
+   the Python boundary). The rewritten vocabulary is cut lazily, so
+   the next step's argmax collect materializes it: ONE Spark job per
+   merge, run with AQE off at a width read from the vocabulary cut.
 
 ``text_bpe_train_merges`` returns the learned merge table
 (rank, left, right, pair_count) — the artifact a tokenizer ships.
@@ -35,6 +37,7 @@ from pyspark.sql import functions as F
 from orca_spark import memo
 from orca_spark.io import rows_to_df
 from orca_spark.registry import register
+from orca_spark.session import cut_width, loop_scope
 from orca_spark.tables import load
 
 _N_MERGES = 6
@@ -138,6 +141,42 @@ def _bpe_oracle_sql(n_merges: int = _N_MERGES) -> str:
     )
 
 
+# Per-step SQL, constant text. The loop binds the argmax pair and its
+# mask pattern as the literal columns ``ml``, ``mr`` and ``pat``, so no
+# symbol is ever spliced into SQL text and none needs escaping.
+_SYMS = "filter(split(word, ''), c -> c <> '') AS syms"
+_PAIRS = (
+    "inline(transform(slice(syms, 1, size(syms) - 1),"
+    " (s, i) -> struct(s AS l, syms[i + 1] AS r)))"
+)
+# Left-to-right non-overlapping merge, LINEAR per word (r13; the r12
+# form was a JVM ``aggregate`` fold whose array-append accumulator
+# copies O(|acc|) per element — O(n²) per word, measured ~60 s on a
+# degenerate 18k-char single-token document while bench-scale words
+# never noticed). Each symbol maps to one mask char ('L' = left, 'R' =
+# right, '0' = other; when left == right the pattern is 'LL' and the
+# 'R' branch is unreachable), and one scan-forward ``replace`` of the
+# pattern with 'PS' IS the greedy non-overlapping pairing: 'LLLL' →
+# 'PSPS' (runs pair leftmost-first, leftover trails), 'LRLRR' →
+# 'PSPSR'. 'P' positions emit the merged symbol, 'S' positions are
+# consumed, everything else passes through. Equivalence with the fold:
+# a merge at i depends only on ORIGINAL adjacency (ml || mr is strictly
+# longer than ml, so a fused token can never re-match as `left`), and
+# within l == r runs both forms pair (0,1)(2,3)… — pinned by the
+# pure-Python replay tests (tests/test_text9_graph.py) and the
+# unrolled-CTE oracle.
+_MARKS = (
+    "replace(array_join(transform(syms, s -> CASE WHEN s = ml THEN 'L'"
+    " WHEN s = mr THEN 'R' ELSE '0' END), ''), pat, 'PS')"
+)
+_REWRITE = (
+    "CASE WHEN size(syms) < 2 THEN syms ELSE transform("
+    f"filter(zip_with(syms, slice(split({_MARKS}, ''), 1, size(syms)),"
+    " (s, c) -> named_struct('s', s, 'c', c)), z -> z.c <> 'S'),"
+    " z -> CASE WHEN z.c = 'P' THEN ml || mr ELSE z.s END) END AS syms"
+)
+
+
 def bpe_train(
     words: DataFrame, n_merges: int = _N_MERGES, cache_key: str | None = None
 ) -> list[tuple]:
@@ -146,12 +185,16 @@ def bpe_train(
     Returns [(rank, left, right, pair_count), ...] — ties broken by
     (count desc, left asc, right asc), fully deterministic.
 
-    Scale notes: the per-step pair count shuffles on (l, r) symbol
-    pairs with map-side combine; the argmax is a single-row collect
-    (the scalar that steers the next step — same bounded pattern as
-    connected components' convergence sum). The vocabulary table is
-    rewritten and localCheckpoint'ed after every merge but the last, so
-    the rewrite lineage never stacks.
+    Scale notes: the (syms, freq) vocabulary is built and cut once,
+    eagerly, with AQE on, so the corpus-wide shuffle stays adaptive.
+    The merge steps then run at a width read from that cut (its
+    partition count, capped at the executor count) with AQE off: each
+    step's pair count shuffles on (l, r) symbol pairs with map-side
+    combine, and its argmax is a single-row collect (the scalar that
+    steers the next step, the same bounded pattern as connected
+    components' convergence sum). The rewritten vocabulary is cut
+    lazily, so the next step's argmax collect materializes it: one
+    Spark job per merge, and the rewrite lineage never stacks.
 
     ``cache_key`` (the corpus dir) memoizes the merges in orca_spark.memo.
     """
@@ -159,81 +202,41 @@ def bpe_train(
         return memo.cached(
             cache_key, ("bpe", n_merges), lambda: bpe_train(words, n_merges)
         )
-    vocab = words.select(
-        F.filter(F.split("word", ""), lambda c: c != F.lit("")).alias("syms"),
-        F.col("freq"),
-    ).localCheckpoint(eager=True)
+    vocab = words.selectExpr(_SYMS, "freq").localCheckpoint(eager=True)
+    width = cut_width(vocab)
+    # the rounds read the cut at the loop's width too, so no round stage
+    # runs more tasks than there are executors
+    vocab = vocab.coalesce(width)
 
     merges: list[tuple] = []
-    for rank in range(n_merges):
-        pairs = (
-            vocab.where(F.size("syms") >= 2)
-            .select(
-                F.explode(
-                    F.expr(
-                        "transform(slice(syms, 1, size(syms) - 1),"
-                        " (s, i) -> struct(s AS l, syms[i + 1] AS r))"
-                    )
-                ).alias("p"),
-                "freq",
+    with loop_scope(vocab.sparkSession, width):
+        for rank in range(n_merges):
+            top = (
+                vocab.where("size(syms) >= 2")
+                .selectExpr(_PAIRS, "freq")
+                .groupBy("l", "r")
+                .agg(F.sum("freq").alias("n"))
+                .orderBy(F.col("n").desc(), "l", "r")
+                .limit(1)
+                .collect()
             )
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("freq").alias("n"))
-        )
-        top = pairs.orderBy(F.col("n").desc(), "l", "r").limit(1).collect()
-        if not top:
-            break  # vocabulary fully merged — nothing adjacent remains
-        left, right, n = top[0].l, top[0].r, top[0].n
-        merges.append((rank, left, right, int(n)))
-        if rank == n_merges - 1:
-            break  # nothing reads the vocabulary after the last merge
-
-        joined = left + right
-
-        # Left-to-right non-overlapping merge, LINEAR per word (r13; the
-        # r12 form was a JVM ``aggregate`` fold whose array-append
-        # accumulator copies O(|acc|) per element — O(n²) per word,
-        # measured ~60 s on a degenerate 18k-char single-token document
-        # while bench-scale words never noticed). Each symbol maps to
-        # one mask char ('L' = left, 'R' = right, '0' = other; when
-        # left == right the pattern is 'LL' and the 'R' branch is
-        # unreachable), and one scan-forward ``replace`` of the pattern
-        # with 'PS' IS the greedy non-overlapping pairing: 'LLLL' →
-        # 'PSPS' (runs pair leftmost-first, leftover trails), 'LRLRR' →
-        # 'PSPSR'. 'P' positions emit the merged symbol, 'S' positions
-        # are consumed, everything else passes through. Equivalence
-        # with the fold: a merge at i depends only on ORIGINAL
-        # adjacency (joined = left+right is strictly longer than left,
-        # so a fused token can never re-match as `left`), and within
-        # l == r runs both forms pair (0,1)(2,3)… — pinned by the
-        # pure-Python replay test (tests/test_text9_graph.py) and the
-        # unrolled-CTE oracle.
-        mask = F.transform(
-            "syms",
-            lambda s: F.when(s == F.lit(left), F.lit("L"))
-            .when(s == F.lit(right), F.lit("R"))
-            .otherwise(F.lit("0")),
-        )
-        pattern = "LR" if left != right else "LL"
-        marks = F.replace(
-            F.concat_ws("", mask), F.lit(pattern), F.lit("PS")
-        )
-        chars = F.slice(F.split(marks, ""), 1, F.size("syms"))
-        zipped = F.zip_with(
-            "syms", chars, lambda s, c: F.struct(s.alias("s"), c.alias("c"))
-        )
-        rewritten = F.transform(
-            F.filter(zipped, lambda z: z["c"] != F.lit("S")),
-            lambda z: F.when(z["c"] == F.lit("P"), F.lit(joined)).otherwise(
-                z["s"]
-            ),
-        )
-        vocab = vocab.select(
-            F.when(F.size("syms") < 2, F.col("syms"))
-            .otherwise(rewritten)
-            .alias("syms"),
-            "freq",
-        ).localCheckpoint(eager=True)
+            if not top:
+                break  # vocabulary fully merged — nothing adjacent remains
+            left, right, n = top[0]
+            merges.append((rank, left, right, int(n)))
+            if rank == n_merges - 1:
+                break  # nothing reads the vocabulary after the last merge
+            vocab = (
+                vocab.select(
+                    "syms",
+                    "freq",
+                    F.lit(left).alias("ml"),
+                    F.lit(right).alias("mr"),
+                    F.lit("LR" if left != right else "LL").alias("pat"),
+                )
+                .selectExpr(_REWRITE, "freq")
+                .localCheckpoint(eager=False)
+            )
     return merges
 
 

@@ -33,7 +33,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from orca_spark.registry import register
-from orca_spark.session import conf_scope, loop_width
+from orca_spark.session import loop_scope, loop_width
 from orca_spark.tables import load
 from orca_spark.xxh64_sql import to_signed, xxh64
 
@@ -561,11 +561,7 @@ def connected_components(
     # already derived, so runtime re-planning only splits every round's
     # single action into 3-4 sub-jobs (the event-log profile showed ~38
     # one-task jobs with ~0.15 s driver gaps for a 6-round loop).
-    confs = {
-        "spark.sql.shuffle.partitions": str(loop_width(spark, sym.count())),
-        "spark.sql.adaptive.enabled": "false",
-    }
-    with conf_scope(spark, confs):
+    with loop_scope(spark, loop_width(spark, sym.count())):
         labels = nodes.select("doc_id", F.col("doc_id").alias("label"))
         prev_sum = None
         for _ in range(max_iter):

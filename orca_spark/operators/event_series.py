@@ -88,7 +88,8 @@ def hourly_series(ev: DataFrame, keys: list[str], **aggs: Column) -> DataFrame:
 
 def _user_grid(ev: DataFrame, **aggs: Column) -> DataFrame:
     """``aggs`` per user and ``_STEP_S`` bucket over every bucket of the
-    user's own [first, last] span, NULL where a bucket has no events."""
+    user's own [first, last] span, NULL where a bucket has no events.
+    A NULL ``user_id`` is one user, with its own span and events."""
     bucket = F.timestamp_seconds(
         F.floor(F.unix_timestamp("ts") / _STEP_S) * _STEP_S
     )
@@ -99,12 +100,20 @@ def _user_grid(ev: DataFrame, **aggs: Column) -> DataFrame:
         F.min("bucket").alias("lo"), F.max("bucket").alias("hi")
     )
     grid = spans.select(
-        "user_id",
+        F.col("user_id").alias("g_user"),
         F.explode(
             F.sequence("lo", "hi", F.expr(f"interval {_STEP_S} seconds"))
-        ).alias("bucket"),
+        ).alias("g_bucket"),
     )
-    return grid.join(b, ["user_id", "bucket"], "left")
+    # null-safe on the user, so a NULL user's buckets find its events
+    on = F.col("g_user").eqNullSafe(F.col("user_id")) & (
+        F.col("g_bucket") == F.col("bucket")
+    )
+    return grid.join(b, on, "left").select(
+        F.col("g_user").alias("user_id"),
+        F.col("g_bucket").alias("bucket"),
+        *aggs,
+    )
 
 
 @register(
@@ -728,7 +737,8 @@ def events_seasonality_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT g.user_id, g.bucket,
                    coalesce(a.n, 0) AS n_events, a.v AS v
             FROM grid g LEFT JOIN agg a
-              ON g.user_id = a.user_id AND g.bucket = a.bucket
+              ON g.user_id IS NOT DISTINCT FROM a.user_id
+             AND g.bucket = a.bucket
         )
         SELECT user_id, bucket, CAST(n_events AS BIGINT) AS n_events,
                last_value(v IGNORE NULLS) OVER (
@@ -798,7 +808,8 @@ def events_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
         series AS (
             SELECT g.user_id, g.bucket, coalesce(b.n, 0) AS n
             FROM grid g LEFT JOIN b
-              ON g.user_id = b.user_id AND g.bucket = b.bucket
+              ON g.user_id IS NOT DISTINCT FROM b.user_id
+             AND g.bucket = b.bucket
         ),
         scored AS (
             SELECT user_id, bucket, CAST(n AS BIGINT) AS n_events,

@@ -26,7 +26,7 @@ from pyspark.sql.window import Window as W
 
 from orca_spark.operators.blocking import prefix_candidates
 from orca_spark.registry import register
-from orca_spark.session import conf_scope, loop_width
+from orca_spark.session import loop_scope, loop_width
 from orca_spark.tables import load
 
 # Jaccard edge threshold as an exact rational (9/10): membership is
@@ -176,11 +176,7 @@ def label_propagation(
     # re-planning only splits each round's checkpoint job into
     # per-stage sub-jobs
     spark = docs.sparkSession
-    confs = {
-        "spark.sql.shuffle.partitions": str(loop_width(spark, edges.count())),
-        "spark.sql.adaptive.enabled": "false",
-    }
-    with conf_scope(spark, confs):
+    with loop_scope(spark, loop_width(spark, edges.count())):
         for _ in range(rounds):
             votes = (
                 edges.join(

@@ -18,7 +18,7 @@ import os
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from orca_spark.vendor import ensure_protobuf
 
@@ -159,9 +159,30 @@ def conf_scope(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
                 spark.conf.set(k, v)
 
 
+@contextmanager
+def loop_scope(spark: SparkSession, width: int) -> Iterator[None]:
+    """Scope for a driver loop's rounds: ``width`` shuffle partitions and
+    AQE off. With the width already derived, runtime re-planning would
+    only split each round's single action into per-stage sub-jobs."""
+    confs = {
+        "spark.sql.shuffle.partitions": str(width),
+        "spark.sql.adaptive.enabled": "false",
+    }
+    with conf_scope(spark, confs):
+        yield
+
+
 def loop_width(spark: SparkSession, n_rows: int) -> int:
     """Shuffle width for a driver loop over ``n_rows`` materialized rows:
     ~50k rows per task, capped at the executor count, so a small input
     stops paying near-empty tasks every round."""
     tasks = (n_rows + 49_999) // 50_000
     return max(1, min(spark.sparkContext.defaultParallelism, tasks))
+
+
+def cut_width(cut: DataFrame) -> int:
+    """Shuffle width for a driver loop over an already materialized
+    ``cut``, read from its plan without a job: its partition count,
+    capped at the executor count."""
+    parts = cut.rdd.getNumPartitions()
+    return max(1, min(cut.sparkSession.sparkContext.defaultParallelism, parts))

@@ -168,6 +168,14 @@ def _dtype_kind(series: pd.Series) -> str:
     return "i" if k in ("i", "u") else k
 
 
+def jobs_in_group(spark, group: str) -> list[int]:
+    """Ids of the jobs submitted under job group ``group``, ascending,
+    read from the status store once the listener bus has drained."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def compare_query(spark, duck_con, fn, oracle: str, sf_dir: str) -> None:
     register_views(duck_con, sf_dir)
     got = normalize(fn(spark, sf_dir).toPandas())

@@ -1,11 +1,12 @@
-"""Events family: the shared dense hour series on a planted frame."""
+"""Events family: the shared dense hour series and per-user grid on
+planted frames."""
 
 import datetime
 
 from pyspark.sql import functions as F
 
 from orca_spark.io import rows_to_df
-from orca_spark.operators.event_series import hourly_series
+from orca_spark.operators.event_series import _user_grid, hourly_series
 
 
 def _events(spark):
@@ -42,4 +43,23 @@ def test_hourly_series_crosses_keys_with_the_global_span(spark):
         ("b", 1, None),
         ("b", 2, None),
         ("b", 3, 1),
+    ]
+
+
+def test_user_grid_keeps_a_null_users_events(spark):
+    at = datetime.datetime
+    rows = [
+        (None, at(2024, 1, 1, 1), 0.5),
+        (None, at(2024, 1, 1, 13), 1.5),
+        (7, at(2024, 1, 1, 2), 2.0),
+        (7, at(2024, 1, 1, 3), 1.0),
+    ]
+    ev = rows_to_df(spark, rows, "user_id long, ts timestamp, value double")
+    got = _user_grid(ev, n=F.count(F.lit(1)), v=F.sum("value"))
+    assert got.columns == ["user_id", "bucket", "n", "v"]
+    assert sorted(got.collect(), key=lambda r: (r.user_id is not None, r)) == [
+        (None, at(2024, 1, 1, 0), 1, 0.5),
+        (None, at(2024, 1, 1, 6), None, None),
+        (None, at(2024, 1, 1, 12), 1, 1.5),
+        (7, at(2024, 1, 1, 0), 2, 3.0),
     ]

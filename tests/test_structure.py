@@ -5,7 +5,9 @@
   scoped changes);
 * SQL text sees DataFrames as ``spark.sql`` arguments, never as
   session-global temp views;
-* the driver-loop width policy lives in ``session.loop_width``;
+* the driver-loop width policies live in ``session.py``, and only
+  ``session.py`` sets the shuffle width (``loop_scope`` for a loop's
+  rounds);
 * a frame is built from driver-side rows only by ``io.rows_to_df``
   (Arrow record batches, no Python worker);
 * streaming modules are named by domain, not by round;
@@ -78,6 +80,15 @@ def test_no_session_global_temp_views():
 def test_loop_width_policy_has_one_copy():
     hits = _hits(r"49_999")
     assert len(hits) == 1, f"use session.loop_width: {hits}"
+
+
+def test_shuffle_width_is_set_only_in_session_module():
+    hits = [
+        h
+        for h in _hits(r'"spark\.sql\.shuffle\.partitions"')
+        if not h.startswith("orca_spark/session.py:")
+    ]
+    assert not hits, f"scope a driver loop's width with session.loop_scope: {hits}"
 
 
 def test_local_frames_are_built_only_in_io():

@@ -11,7 +11,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from orca_spark.tables import TABLES, load, parquet_schema
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_in_group
 
 # the three bundled corpora, beside the default test corpus
 _CORPORA = [os.path.join(os.path.dirname(SF_DIR), sf) for sf in ("sf0.001", "sf0.01", "sf0.1")]
@@ -159,12 +159,6 @@ def test_nanos_timestamp_schema_follows_session_conf(spark, tmp_path, confs):
             parquet_schema(session, path)
 
 
-def _jobs_in_group(spark, group: str) -> list[int]:
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
-    return list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_load_on_a_fresh_corpus_submits_no_job(spark, tmp_path):
     src = SF_DIR
     for name in TABLES:
@@ -174,10 +168,10 @@ def test_load_on_a_fresh_corpus_submits_no_job(spark, tmp_path):
     sc.setJobGroup(group, "tables.load on a fresh corpus")
     try:
         frames = [load(spark, str(tmp_path), name) for name in TABLES]
-        assert _jobs_in_group(spark, group) == []
+        assert jobs_in_group(spark, group) == []
         # the probe sees jobs: inference runs one per read
         spark.read.parquet(f"{src}/region.parquet")
-        assert _jobs_in_group(spark, group) != []
+        assert jobs_in_group(spark, group) != []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)

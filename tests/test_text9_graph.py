@@ -5,11 +5,14 @@ propagation (iterative majority vote). The oracled siblings
 events_ewma_smoothed) are gated by test_queries_oracle.py and the
 adversarial corpus harness like every other oracled query."""
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
 from orca_spark.operators.bpe import bpe_train
 from orca_spark.operators.graph import label_propagation
+from tests.conftest import jobs_in_group
 
 
 # ---------------------------------------------------------------- BPE
@@ -88,6 +91,109 @@ def test_bpe_exhausts_and_stops_early(spark):
 
 def test_bpe_deterministic(bpe_words):
     assert bpe_train(bpe_words, n_merges=5) == bpe_train(bpe_words, n_merges=5)
+
+
+# every symbol the rewrite's mask or SQL text could confuse: the mask
+# chars themselves, a quote, a backslash, the unit separator, a non-BMP
+# emoji, left == right runs, and 1-char and empty words; nine merges
+# exhaust it, so n_merges=10 ends on the early stop
+_PLANTED = {
+    "aaaa": 4,
+    "aaa": 3,
+    "L'R": 3,
+    "\\S": 2,
+    "P0\x1f": 2,
+    "\U0001F600\U0001F600": 2,
+    "R": 5,
+    "": 1,
+}
+
+
+def test_bpe_planted_symbols_match_python_reference(spark):
+    words = spark.createDataFrame(list(_PLANTED.items()), "word string, freq long")
+    want = python_bpe(_PLANTED, n_merges=10)
+    assert len(want) < 10
+    assert bpe_train(words, n_merges=10) == want
+
+
+def _train_in_group(spark, words, n_merges: int):
+    sc = spark.sparkContext
+    group = "bpe-train-" + uuid.uuid4().hex
+    sc.setJobGroup(group, "bpe_train")
+    try:
+        merges = bpe_train(words, n_merges=n_merges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return merges, jobs_in_group(spark, group)
+
+
+_LOOP_CONFS = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+
+
+@pytest.fixture
+def wide_session(spark):
+    """A plain session left at the default 200 shuffle partitions."""
+    s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "200")
+    return s
+
+
+def _wide_words(s):
+    # through a shuffle, so the vocabulary cut reads the session's width
+    return (
+        s.createDataFrame(list(_BPE_CORPUS.items()), "word string, freq long")
+        .groupBy("word")
+        .agg(F.sum("freq").alias("freq"))
+    )
+
+
+def test_bpe_train_runs_one_job_per_merge(bpe_words, spark):
+    merges, jobs = _train_in_group(spark, bpe_words, n_merges=6)
+    assert len(merges) == 6
+    assert len(jobs) <= 6 + 2, jobs
+
+
+def test_bpe_rounds_stay_within_default_parallelism(wide_session):
+    s = wide_session
+    merges, jobs = _train_in_group(s, _wide_words(s), n_merges=4)
+    assert len(merges) == 4
+    tracker, cap = s.sparkContext.statusTracker(), s.sparkContext.defaultParallelism
+    # one job per merge, the last ones in the group
+    tasks = [
+        tracker.getStageInfo(sid).numTasks
+        for jid in jobs[-len(merges) :]
+        for sid in tracker.getJobInfo(jid).stageIds
+    ]
+    assert tasks and max(tasks) <= cap, (tasks, cap)
+
+
+@pytest.mark.parametrize("raises", [False, True])
+def test_bpe_loop_scope_restores_confs(wide_session, monkeypatch, raises):
+    s = wide_session
+    words = _wide_words(s)
+    before = {k: s.conf.get(k, None) for k in _LOOP_CONFS}
+    seen = []
+    collect = type(words).collect
+
+    def spy(df):
+        seen.append({k: s.conf.get(k, None) for k in _LOOP_CONFS})
+        if raises and len(seen) == 2:
+            raise RuntimeError("failed mid-loop")
+        return collect(df)
+
+    monkeypatch.setattr(type(words), "collect", spy)
+    if raises:
+        with pytest.raises(RuntimeError, match="failed mid-loop"):
+            bpe_train(words, n_merges=4)
+    else:
+        assert len(bpe_train(words, n_merges=4)) == 4
+    monkeypatch.undo()
+    # each round's argmax ran with AQE off at a derived width ...
+    assert seen and all(c["spark.sql.adaptive.enabled"] == "false" for c in seen)
+    assert all(c["spark.sql.shuffle.partitions"] != "200" for c in seen)
+    # ... and the session reads back what it had before the loop
+    assert {k: s.conf.get(k, None) for k in _LOOP_CONFS} == before
 
 
 def test_bpe_merge_table_reaches_jvm_without_python_worker(spark):
