@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from orca_spark.operators.text6 import _tokens, unigram_logprob_df
+from orca_spark.operators.text_lm import _tokens, unigram_logprob_df
 from orca_spark.registry import register
 from orca_spark.tables import load
 

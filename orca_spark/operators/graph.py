@@ -44,7 +44,7 @@ def neardup_edges(docs: DataFrame) -> DataFrame:
     ``i * den >= (sa + sb - i) * num``.
 
     Prefix-filtered SSJoin (same technique as dedup_ngram_jaccard,
-    text3.py): token sets are aggregated per document, tokens globally
+    spans.py): token sets are aggregated per document, tokens globally
     ordered by document frequency, and only each document's
     ``sz - ceil(t·sz) + 1`` RAREST tokens are indexed — by the prefix
     theorem two sets with Jaccard >= t must share a prefix token, so

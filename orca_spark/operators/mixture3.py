@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from orca_spark.operators.mixture2 import _with_isqrt
-from orca_spark.operators.text6 import unigram_logprob_df
+from orca_spark.operators.text_lm import unigram_logprob_df
 from orca_spark.registry import register
 from orca_spark.tables import load
 

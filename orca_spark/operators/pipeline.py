@@ -1,8 +1,9 @@
 """End-to-end pretraining-corpus build as ONE declarative plan.
 
 The showcase composition: the hygiene stages this engine provides as
-individual operators — quality gate (text5), exact dedup survivors
-(dedup), content-hash split assignment (text4) — chained into a single
+individual operators — quality gate (documents_quality_filter), exact
+dedup survivors (dedup), content-hash split assignment
+(documents_train_val_test) — chained into a single
 DataFrame plan that ends in the per-(split, lang) corpus card a data
 curator actually reads: document counts, token totals, source
 diversity, mean repetition. Because every stage is declarative,
@@ -11,8 +12,8 @@ two shuffles (the dedup group and the final rollup) — composition adds
 ZERO extra passes over the corpus.
 
 Stage constants deliberately mirror the standalone operators
-(documents_quality_filter's C4/Gopher thresholds, text4's md5-nibble
-split), so the composite is consistent with its parts.
+(documents_quality_filter's C4/Gopher thresholds,
+documents_train_val_test's md5-nibble split), so the composite is consistent with its parts.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from pyspark.sql import functions as F
 from orca_spark.registry import register
 from orca_spark.tables import load
 
-# text4.py's content-hash split: a pure function of the text
+# documents_train_val_test's content-hash split: a pure function of the text
 _SPLIT_CASE_SQL = (
     "CASE WHEN substr(md5(text), 1, 1) < 'c' THEN 'train' "
     "WHEN substr(md5(text), 1, 1) < 'e' THEN 'val' ELSE 'test' END"

@@ -13,7 +13,7 @@ score, the sampling weight, and the training-block capacity.
 Stage provenance (each is a green standalone operator whose constants
 this composite reuses, so the composite is consistent with its parts):
 
-* gate — text19's Gopher A1.1 token rules (word-count bounds, mean
+* gate — ``text_gopher_quality_rules``' Gopher A1.1 token rules (word-count bounds, mean
   word length in centi-chars, minimum stopword hits; the line-level
   rules stay in ``text_gopher_quality_rules``).
 * exact dedup — dedup.py's min-doc_id-per-content-hash survivors.
@@ -68,7 +68,7 @@ from pyspark.sql import functions as F
 
 from orca_spark.operators.curation2 import _DSIR_TARGET
 from orca_spark.operators.mixture2 import _with_isqrt
-from orca_spark.operators.text19 import (
+from orca_spark.operators.text_quality import (
     _MAX_MWL_C,
     _MAX_WORDS,
     _MIN_MWL_C,
@@ -81,7 +81,7 @@ from orca_spark.tables import load
 _PREFIX_TOKS = 32  # near-dedup fingerprint: leading token count
 _BLOCK = 2048  # packing.py's training-block size
 # Gopher requires >= 2 distinct stopwords from a large probe list; this
-# engine's probe list (text19) is 8 words, and the synthetic corpus
+# engine's probe list (text_quality) is 8 words, and the synthetic corpus
 # carries at most ONE of them per document — the proportional operating
 # point for the composite's hard gate is >= 1 distinct hit (the
 # scorecard operator keeps the paper's >= 2 for its keep flag; a gate
@@ -125,7 +125,8 @@ def gate_rows(docs: DataFrame) -> DataFrame:
         "text",
         "toks",
         F.size("toks").cast("long").alias("n_words"),
-        # BIGINT widen BEFORE the multiply (text19's ANSI-overflow rule)
+        # BIGINT widen BEFORE the multiply (the ANSI-overflow rule of
+        # text_gopher_quality_rules)
         F.when(F.size("toks") == 0, F.lit(0).cast("long"))
         .otherwise(F.expr("CAST(tok_chars AS BIGINT) * 100 div size(toks)"))
         .alias("mwl_c"),

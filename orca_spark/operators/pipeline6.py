@@ -20,9 +20,9 @@ compositions a production curation run executes as ONE job —
   word-8-gram that appears ANYWHERE in the benchmark scrubbed from
   their text (the span-scrub machinery pointed across corpora) — the
   Lee et al. 2022 observation that benchmark overlap hides in spans,
-  not just whole documents. Output is the text11 accounting contract
-  (n_tokens / n_scrubbed / integer ppm / kept-text md5), driver
-  value-checked per document.
+  not just whole documents. Output is the span-scrub accounting
+  contract of ``spans.scrub_finale`` (n_tokens / n_scrubbed / integer
+  ppm / kept-text md5), driver value-checked per document.
 
 Both compositions are fully value-oracled: the gate is _GATE-parity
 SQL (pipeline4), exact dedup groups md5 in the oracle vs xxhash64 in
@@ -47,12 +47,17 @@ from pyspark.sql import functions as F
 from orca_spark.operators.multimodal7 import _PPM_TILE_SQL, phash_ppm_table
 from orca_spark.operators.pipeline4 import gated_docs
 from orca_spark.operators.pipeline5 import _GATE_SQL
-from orca_spark.operators.text21 import scrub_finale
+from orca_spark.operators.spans import (
+    _SPAN_N,
+    positioned_grams,
+    scrub_finale,
+    span_cover,
+    span_tokens,
+)
 from orca_spark.registry import register
 from orca_spark.tables import load
 
 _MAX_HAMMING = 6   # multimodal7 family convention
-_SPAN_N = 8        # text11 family gram width
 
 
 # ---------------------------------------------------------------------------
@@ -275,58 +280,33 @@ def pipeline_multimodal_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"{_SPAN_N}-gram of the survivors that appears anywhere in the "
     "benchmark is scrubbed from their text — span-level overlap removed, "
     "not just whole-doc matches (Lee 2022's ExactSubstr applied across "
-    "corpora); text11 accounting contract with driver value-checked "
-    "kept-text md5; fully oracled (md5-vs-xxhash64 grouping equivalence "
-    "on both the doc key and the gram key)",
+    "corpora); dedup_span_scrub accounting contract with driver "
+    "value-checked kept-text md5; fully oracled (md5-vs-xxhash64 "
+    "grouping equivalence on both the doc key and the gram key)",
 )
 def pipeline_decontaminate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: the benchmark side (eval sets — thousands-to-millions of
     rows, never corpus-scale) compiles to a distinct hashed-gram set
     that BROADCASTS; the corpus side tokenizes once (persisted), drops
     exact matches via an 8-byte-hash anti-join, joins its hashed grams
-    against the broadcast, and the scrub finale is the text11 shape:
+    against the broadcast, and the scrub finale is dedup_span_scrub's:
     (doc_id, idx)-keyed distinct + anti-join + doc-keyed aggregate.
     Zero corpus-sized wide-key shuffles; the gram STRING never leaves
     the scan (xxhash64 keys, scrub_hashed's contract)."""
     d = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    tokenize = F.filter(F.split("text", " "), lambda t: t != F.lit(""))
-    bench = d.where(F.col("source") == "src0").select(
-        F.xxhash64("text").alias("h"), tokenize.alias("toks")
-    )
+    h = F.xxhash64("text").alias("h")
+    bench = span_tokens(d.where(F.col("source") == "src0"), h)
     corpus = (
-        d.where(F.col("source") != "src0")
-        .select(
-            "doc_id", "source", F.xxhash64("text").alias("h"),
-            tokenize.alias("toks"),
-        )
+        span_tokens(d.where(F.col("source") != "src0"), "source", h)
         .join(F.broadcast(bench.select("h").distinct()), "h", "left_anti")
         .drop("h")
         .localCheckpoint(eager=False)  # tokenize once, consume thrice
     )
-    gram_expr = (
-        f"transform(sequence(1, size(toks) - {_SPAN_N - 1}),"
-        f" i -> xxhash64(concat_ws(' ', slice(toks, i, {_SPAN_N}))))"
-    )
     bgrams = (
-        bench.where(F.size("toks") >= _SPAN_N)
-        .select(F.explode(F.expr(gram_expr)).alias("gram_h"))
+        positioned_grams(bench, "gram_h", hashed=True)
+        .select("gram_h")
         .distinct()
     )
-    grams = corpus.where(F.size("toks") >= _SPAN_N).select(
-        "doc_id",
-        F.posexplode(F.expr(gram_expr)).alias("p0", "gram_h"),
-    ).select("doc_id", (F.col("p0") + 1).alias("i"), "gram_h")
-    cov = (
-        grams.join(F.broadcast(bgrams), "gram_h")
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.col("i"), F.col("i") + F.lit(_SPAN_N - 1))
-            ).alias("idx"),
-        )
-        .distinct()
-    )
-    # the accounting finale (nsc/pos/keep + the value-checked select)
-    # is text21's shared builder — the three span-scrub surfaces cannot
-    # drift apart
+    grams = positioned_grams(corpus, "gram_h", hashed=True)
+    cov = span_cover(grams.join(F.broadcast(bgrams), "gram_h"))
     return scrub_finale(corpus, cov, extra_cols=("source",))

@@ -3,7 +3,7 @@ semantic (embedding-cosine) ranking — the standard two-tower retrieval
 composition (RRF, k=60), used in corpus slicing and retrieval-based
 decontamination where neither signal alone suffices.
 
-Both rankings reuse proven components: ``text6.bm25_scores_df`` for the
+Both rankings reuse proven components: ``text_lm.bm25_scores_df`` for the
 lexical list and the broadcast-query cosine scan from the similarity
 family for the semantic list.  Fusion is rank-only (RRF's point): no
 score calibration needed across the two signals.  Each ranking is
@@ -19,7 +19,7 @@ from pyspark.sql.window import Window as W
 
 from orca_spark.io import rows_to_df
 from orca_spark.operators.similarity import _with_norm, dot, load_embeddings
-from orca_spark.operators.text6 import _BM25_QUERY, bm25_scores_df
+from orca_spark.operators.text_lm import _BM25_QUERY, bm25_scores_df
 from orca_spark.registry import register
 from orca_spark.tables import load
 

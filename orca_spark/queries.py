@@ -15,7 +15,16 @@ from orca_spark.registry import REGISTRY, QuerySpec
 # queries). Invariants pinned by test_registry_contract.py::
 # test_verification_prefix_self_rotates.
 from orca_spark.operators import similarity2, similarity  # noqa: F401
-from orca_spark.operators import text6  # noqa: F401  (new in r05: TF-IDF/BM25)
+# The text family: token and language basics (text), document quality
+# rules (text_quality), corpus statistics (corpus_stats), term weighting
+# and language models (text_lm), and span-level operators (spans).
+from orca_spark.operators import (  # noqa: F401
+    text,
+    text_quality,
+    corpus_stats,
+    text_lm,
+    spans,
+)
 from orca_spark.operators import multimodal  # noqa: F401
 from orca_spark.operators import (  # noqa: F401
     io_ops,
@@ -29,7 +38,6 @@ from orca_spark.operators import (  # noqa: F401
     dedup3,
     clustering,
     sampling,
-    text7,
     similarity3,
 )
 
@@ -51,7 +59,6 @@ from orca_spark.operators import (  # noqa: F401
     schema_ops,
     audit,
     linkage,
-    text8,
     langid,
     sketches,
 )
@@ -62,11 +69,8 @@ from orca_spark.operators import (  # noqa: F401
 from orca_spark.operators import (  # noqa: F401
     dedup,
     dedup2,
-    text5,
     ranges,
     relational4,
-    text4,
-    text3,
     relational6,
     relational,
     relational2,
@@ -74,8 +78,6 @@ from orca_spark.operators import (  # noqa: F401
     relational5,
     scalars2,
     skew,
-    text,
-    text2,
     analytics,
     asof,
     profile,
@@ -86,20 +88,17 @@ from orca_spark.operators import (  # noqa: F401
 # dense hour series with every query over it (event_series).
 from orca_spark.operators import events, event_behavior, event_series  # noqa: F401
 
-# r05 batch 3: LM scoring / collocations, BPE merge training, near-dup
-# graph analytics. Verification slots are scheduled by
+# r05 batch 3: BPE merge training, near-dup graph analytics. Verification slots are scheduled by
 # __spark_entry__.verification_order (never-green first), not by this
 # import's position.
 from orca_spark.operators import (  # noqa: F401
-    text9,
     bpe,
     graph,
 )
 
-# r05 batch 4: phrase search, categorical association, weighted
-# similarity, quantile feature scaling.
+# r05 batch 4: categorical association, weighted similarity, quantile
+# feature scaling.
 from orca_spark.operators import (  # noqa: F401
-    text10,
     stats2,
     similarity4,
     embeddings2,
@@ -116,9 +115,8 @@ from orca_spark.operators import pipeline  # noqa: F401
 from orca_spark.operators import scalars3, containment, affinity, ivm  # noqa: F401
 from orca_spark.operators import cohorts2, whitening  # noqa: F401
 
-# r06 batch 1: duplicate-span coverage, per-source percentile quality
-# gate, pair-free corpus diversity, fixed-point PageRank.
-from orca_spark.operators import text11, embeddings3  # noqa: F401
+# r06 batch 1: pair-free corpus diversity, fixed-point PageRank.
+from orca_spark.operators import embeddings3  # noqa: F401
 
 # r06 batch 2: BPE train->apply token accounting, water-filling
 # training-mix planner.
@@ -133,22 +131,20 @@ from orca_spark.operators import paths, privacy, stats3  # noqa: F401
 # chunking), triangle census.
 from orca_spark.operators import packing, graph2  # noqa: F401
 
-# r07 batch 3: count-preserving dedup, source KL drift, embedding
-# outliers.
-from orca_spark.operators import dedup4, text12, embeddings4  # noqa: F401
+# r07 batch 3: count-preserving dedup, embedding outliers.
+from orca_spark.operators import dedup4, embeddings4  # noqa: F401
 
-# r07 batch 4: l-diversity audit, Zipf fit.
-from orca_spark.operators import privacy2, text13  # noqa: F401
+# r07 batch 4: l-diversity audit.
+from orca_spark.operators import privacy2  # noqa: F401
 
-# r07 batch 5: Matryoshka truncation fidelity, cross-source n-gram
-# novelty, real resize kernel on the multimodal Arrow path, language-ID
-# confusion matrix.
-from orca_spark.operators import embeddings5, text14, multimodal2  # noqa: F401
+# r07 batch 5: Matryoshka truncation fidelity, real resize kernel on
+# the multimodal Arrow path, language-ID confusion matrix.
+from orca_spark.operators import embeddings5, multimodal2  # noqa: F401
 from orca_spark.operators import langid2  # noqa: F401
 
 # r07 batch 6: exact rank-based median, gaps-and-islands streaks,
-# hashing-trick featurizer, composed chunk-dedup RAG index.
-from orca_spark.operators import relational9, text15, pipeline2  # noqa: F401
+# composed chunk-dedup RAG index.
+from orca_spark.operators import relational9, pipeline2  # noqa: F401
 
 # r07 batch 7: custom Python DataSource (Spark 4 API) round-trip.
 from orca_spark.sources import jsonl  # noqa: F401
@@ -157,19 +153,16 @@ from orca_spark.sources import jsonl  # noqa: F401
 # coefficient, fixed-round k-core, common-neighbor link prediction).
 from orca_spark.operators import graph3  # noqa: F401
 
-# r07 batch 9: corpus-health lexical stats (hapax/TTR, source JSD,
-# per-source dup rate, sentence shapes), and the adjacent-pair cosine
-# histogram over embeddings.
-from orca_spark.operators import embeddings6, text16  # noqa: F401
+# r07 batch 9: the adjacent-pair cosine histogram over embeddings.
+from orca_spark.operators import embeddings6  # noqa: F401
 
 # r07 batch 10: business-calendar analytics (YoY growth, SLA breach),
 # budget-constrained curation manifest, and the Python-DataSource
 # WRITE path (two-phase-commit JSONL sink, registered in sources.jsonl).
 from orca_spark.operators import packing2, relational10  # noqa: F401
 
-# r07 batch 11: t-closeness (completing the k/l/t governance trio),
-# n-gram entropy rate, shared-prefix boilerplate manifest.
-from orca_spark.operators import privacy3, text17  # noqa: F401
+# r07 batch 11: t-closeness (completing the k/l/t governance trio).
+from orca_spark.operators import privacy3  # noqa: F401
 
 # r07 batch 12: structured-data fuzzy dup detection (double-charge
 # pairs).
@@ -194,9 +187,6 @@ from orca_spark.operators import analytics2  # noqa: F401
 # and the code-vs-prose router.
 from orca_spark.operators import stats4  # noqa: F401
 
-# r07 batch 20: boilerplate-strip accounting.
-from orca_spark.operators import text18  # noqa: F401
-
 # r07 batch 21: monthly return-rate series.
 from orca_spark.operators import analytics3  # noqa: F401
 
@@ -208,10 +198,8 @@ from orca_spark.operators import analytics4  # noqa: F401
 # embed-join -> per-language budget pack), r07 verdict item 8.
 from orca_spark.operators import pipeline3  # noqa: F401
 
-# r08 batch 3: the published Gopher quality-rule scorecard + zlib
-# compression-ratio signal, and the per-dimension embedding
-# distribution monitor.
-from orca_spark.operators import embeddings7, text19  # noqa: F401
+# r08 batch 3: the per-dimension embedding distribution monitor.
+from orca_spark.operators import embeddings7  # noqa: F401
 
 # r08 batch 4: WITH RECURSIVE (Spark 4 recursive CTE), interval x
 # interval overlap join, the running-COUNT(DISTINCT) rewrite, and
@@ -227,9 +215,8 @@ from orca_spark.operators import analytics5, multimodal4, relational14  # noqa: 
 from orca_spark.operators import curation2  # noqa: F401
 
 # r08 batch 9: TPC-H q2 completion lives in relational7; robust stats
-# (Theil-Sen trend, Kaplan-Meier survival) and the C4 cleaning rules.
+# (Theil-Sen trend, Kaplan-Meier survival).
 from orca_spark.operators import robust  # noqa: F401
-from orca_spark.operators import text20  # noqa: F401
 
 # r08 batch 10: audio/video modality kernels, chi-square contingency
 # audit, boundary-overlap dedup.
@@ -268,13 +255,10 @@ from orca_spark.operators import multimodal7  # noqa: F401
 # order does not depend on what the streaming modules import.
 from orca_spark.streaming import jobs, stateful, ingest  # noqa: F401
 
-# r11 batch 3: the paper-exact ExactSubstr form (within-doc repeats +
-# keep-one canonical copy — closes the r10 advisor's parity note as a
-# registered operator, not a docstring caveat) and the int8
-# scalar-quantized ANN path — the first compressed-domain similarity
+# r11 batch 3: the int8 scalar-quantized ANN path — the first compressed-domain similarity
 # query with a full value oracle (integer dots are summation-order
 # exact, unlike the float paths that keep PQ/LSH/IVF rows-only).
-from orca_spark.operators import similarity5, text21  # noqa: F401
+from orca_spark.operators import similarity5  # noqa: F401
 
 # r12: the two policy compositions (r11 verdict item 8) — the
 # multimodal corpus build (gate -> text dedup -> phash near-dup drop ->

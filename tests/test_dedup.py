@@ -163,7 +163,7 @@ def test_winnowing_shared_run_guarantee(spark):
     """Winnowing's core property (SIGMOD'03): two documents sharing a
     token run of length >= n + w - 1 + (w - 1) grams must share at least
     one fingerprint, and unrelated texts share none."""
-    from orca_spark.operators.text3 import winnowing_fingerprints
+    from orca_spark.operators.spans import winnowing_fingerprints
 
     shared = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     docs = spark.createDataFrame(
@@ -182,7 +182,7 @@ def test_winnowing_shared_run_guarantee(spark):
 
 
 def test_winnowing_short_doc_keeps_one_fingerprint(spark):
-    from orca_spark.operators.text3 import winnowing_fingerprints
+    from orca_spark.operators.spans import winnowing_fingerprints
 
     docs = spark.createDataFrame(
         [(1, "just three tokens"), (2, "ab"), (3, "four little tokens here")],

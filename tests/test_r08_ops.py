@@ -323,7 +323,7 @@ def test_compression_ratio_orders_repetition_below_noise(spark, tmp_path):
     # kernel determinism: the registered map is a pure function
     import pandas as pd
 
-    from orca_spark.operators.text19 import _compress_batches
+    from orca_spark.operators.text_quality import _compress_batches
 
     pdf = pd.DataFrame({"doc_id": [1, 2], "text": [rep, noise]})
     a = next(_compress_batches(iter([pdf])))

@@ -129,6 +129,33 @@ def test_exactsubstr_short_and_unique_docs_pass_through(spark, tmp_path):
     assert rows[2].kept_md5 == _md5_words(_U1)
 
 
+def test_span_coverage_counts_grams_shared_across_docs(spark, tmp_path):
+    """dedup_span_coverage counts a gram position as duplicated only when
+    its gram occurs in another DOCUMENT: a gram shared by two docs
+    counts in both, a within-doc repeat does not (nd counts distinct
+    docs), docs under 8 tokens are omitted, and the empty tokens of
+    double spaces are dropped before the grams are cut."""
+    rep = "p1 p2 p3 p4 p5 p6 p7 p8".split()
+    sf = _write_docs(
+        tmp_path,
+        [
+            # 11 tokens once the double space's empty token is dropped:
+            # 4 grams, the one at position 3 is _G
+            (1, "x1  x2 " + " ".join(_G) + " y1", "en", "web"),
+            (2, " ".join(_G) + " z1", "en", "web"),  # 2 grams, first is _G
+            (3, " ".join(rep + rep), "en", "web"),  # repeat inside one doc
+            (4, "short doc here", "en", "web"),
+            # 8 split pieces but 7 tokens: no gram once empties drop
+            (5, "q1 q2 q3  q4 q5 q6 q7", "en", "web"),
+        ],
+    )
+    rows = {
+        r.doc_id: (r.n_spans, r.dup_spans, r.dup_frac)
+        for r in _Q["dedup_span_coverage"](spark, sf).collect()
+    }
+    assert rows == {1: (4, 1, 0.25), 2: (2, 1, 0.5), 3: (9, 0, 0.0)}
+
+
 # ---------------------------------------------------------- similarity
 
 

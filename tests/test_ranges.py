@@ -78,7 +78,7 @@ def test_interval_join_boundary_semantics(spark):
 def test_prefix_filter_jaccard_exact_vs_naive(spark):
     """The prefix theorem guarantee: the bucketed join finds EVERY pair
     with Jaccard >= t, on a corpus engineered with hot and rare grams."""
-    from orca_spark.operators.text3 import _JACCARD_T, dedup_ngram_jaccard
+    from orca_spark.operators.spans import _JACCARD_T, dedup_ngram_jaccard
     from orca_spark.tables import load
 
     sf = "/root/testdata/sf0.001"

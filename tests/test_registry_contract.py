@@ -411,6 +411,26 @@ def test_changed_code_tier_schedules_ahead_of_stale_green():
         )
 
 
+def test_verification_backlog_fits_one_prefix():
+    """Never-green/regressed queries and queries whose fingerprint changed
+    since their last green row are the two tiers verification_order puts
+    first. Together they must fit the driver's 50-slot prefix, or a
+    batch of registered-body edits would leave some of them unverified
+    for a round; split such a batch across changes instead."""
+    import __spark_entry__ as entry
+
+    prefix_size = 50
+    names = list(queries())
+    prio = entry._evidence_priority()
+    changed = entry._changed_since_green()
+    backlog = {n for n in names if prio.get(n, -1) == -1 or n in changed}
+    assert len(backlog) <= prefix_size, (
+        f"{len(backlog)} never-green or changed-since-green queries exceed "
+        f"the {prefix_size}-slot driver prefix"
+    )
+    assert set(entry.verification_order(names)[: len(backlog)]) == backlog
+
+
 def test_fingerprints_detect_oracle_edit():
     """The fingerprint must move when a query's oracle SQL changes —
     otherwise the changed-code tier can never fire on a semantics edit."""

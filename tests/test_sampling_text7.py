@@ -7,8 +7,8 @@ rates, zero-vs-large drift) that the oracle equivalence can't express.
 
 import pytest
 
+from orca_spark.operators.corpus_stats import source_length_psi, text_vocab_oov
 from orca_spark.operators.sampling import _K_PER_GROUP, sample_weighted_per_lang
-from orca_spark.operators.text7 import source_length_psi, text_vocab_oov
 from tests.conftest import SF_DIR
 
 

@@ -17,7 +17,11 @@
 * events and time-series modules are named by domain, not by round;
 * the dense hour spine and its [1970, 2100) event-time window live only
   in ``event_series.hourly_series``, and the per-user bucket grid has
-  one copy.
+  one copy;
+* text modules are named by domain, not by round, and nothing imports a
+  round-numbered text module;
+* the word-gram span pipeline (gram expression, span cover, scrub
+  finale, gram width) has one copy, in ``spans``.
 """
 
 import ast
@@ -172,3 +176,49 @@ def test_hour_spine_only_in_hourly_series():
 def test_per_user_grid_has_one_copy():
     hits = _hits(r'F\.sequence\("lo",\s*"hi",')
     assert len(hits) == 1, f"build per-user grids with event_series._user_grid: {hits}"
+
+
+def test_text_modules_are_not_round_numbered():
+    numbered = sorted(
+        p.name for p in (_PKG / "operators").glob("text*.py") if p.stem[-1].isdigit()
+    )
+    assert not numbered, (
+        f"fold these into text, text_quality, corpus_stats, text_lm or spans: {numbered}"
+    )
+
+
+def test_no_round_numbered_text_imports():
+    repo = _PKG.parent
+    files = [
+        p
+        for p in repo.rglob("*.py")
+        if not {"third_party", ".git"} & set(p.relative_to(repo).parts)
+    ]
+    hits = []
+    for p in files:
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, ast.ImportFrom):
+                mods = [node.module or ""]
+                mods += [f"{node.module}.{a.name}" for a in node.names]
+            elif isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            else:
+                continue
+            if any(re.fullmatch(r"orca_spark\.operators\.text\d+", m) for m in mods):
+                hits.append(f"{p.relative_to(repo)}:{node.lineno}")
+    assert not hits, f"import the domain text modules instead: {hits}"
+
+
+def test_span_pipeline_has_one_copy():
+    # the oracles' DuckDB ``list_slice(toks, i, ...)`` is SQL text, not
+    # the Spark gram expression
+    patterns = {
+        r"(?<!list_)slice\(toks, i,": "spans.positioned_grams",
+        r'F\.col\("i"\) \+ F\.lit\(_SPAN_N - 1\)': "spans.span_cover",
+        r"struct\(idx, tok\)": "spans.scrub_finale",
+        r"^_SPAN_N\s*=": "spans._SPAN_N",
+    }
+    for pattern, home in patterns.items():
+        hits = _hits(pattern)
+        assert len(hits) == 1, f"use {home}: {hits}"
+        assert hits[0].startswith("orca_spark/operators/spans.py:"), hits
